@@ -15,6 +15,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .session import _DEFAULT_CONF
+
 # Parquet TIMESTAMP(NANOS) columns arrive as long (see session.py
 # nanosAsLong); convert to µs-precision timestamps, truncating exactly
 # like DuckDB does, so oracle comparisons line up.
@@ -57,27 +59,23 @@ STANDARD_TABLES = (
 BROADCAST_TABLES = frozenset({"region", "nation"})
 
 
-# Runtime-settable SQL confs the engine depends on.  Applied on
-# whatever session we're handed (the driver builds its own session and
-# passes it to __spark_entry__.entry, so build-time conf in session.py
-# is not guaranteed to be present).
-_RUNTIME_CONF = {
-    # events.ts is parquet TIMESTAMP(NANOS): Spark errors on it unless
-    # read as long (we then truncate to µs like DuckDB does).
-    "spark.sql.legacy.parquet.nanosAsLong": "true",
-    # Deterministic timestamp values for the DuckDB oracle comparison.
-    "spark.sql.session.timeZone": "UTC",
-    # Arrow transfer for the pandas-based pipeline operators.
-    "spark.sql.execution.arrow.pyspark.enabled": "true",
-    # Byte-sized AQE partition coalescing (see session.py r13/r14 note):
-    # runtime-settable, so the driver's vanilla session gets the same
-    # scale-adaptive reducer sizing the bench session has.  Reads the
-    # same env knobs as session.py so one override reaches both paths.
-    "spark.sql.adaptive.coalescePartitions.parallelismFirst":
-        os.environ.get("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "false"),
-    "spark.sql.adaptive.advisoryPartitionSizeInBytes":
-        os.environ.get("SPARK_GRAFT_ADVISORY_PARTITION_BYTES", "8m"),
-}
+# Runtime-settable SQL confs the engine depends on, taken by key from
+# the one conf table (session._DEFAULT_CONF).  Applied on whatever
+# session we're handed: the driver builds its own session and passes it
+# to __spark_entry__.entry, so build-time conf is not guaranteed there.
+# - nanosAsLong: events.ts is parquet TIMESTAMP(NANOS); Spark errors on
+#   it unless read as long (we then truncate to µs like DuckDB does).
+# - timeZone: deterministic timestamps for the DuckDB oracle.
+# - arrow: transfer for the pandas-based pipeline operators.
+# - AQE byte-sized coalescing (see session.py r13/r14 note), so the
+#   vanilla session gets the same reducer sizing and env overrides.
+_RUNTIME_CONF = {k: _DEFAULT_CONF[k] for k in (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.session.timeZone",
+    "spark.sql.execution.arrow.pyspark.enabled",
+    "spark.sql.adaptive.coalescePartitions.parallelismFirst",
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes",
+)}
 
 
 def apply_runtime_conf(spark: SparkSession) -> None:

@@ -9,10 +9,11 @@ reference src/Interpreters/PasteJoin.h:20.
 
 Spark-first implementations:
 
-- ``asof_join``: union + window ``last(ignorenulls)`` rewrite — a single
-  shuffle on the equi-keys, scales to arbitrarily large both-sides (no
-  pandas ``merge_asof``, no broadcast requirement, no per-group driver
-  loop). Handles all four inequalities (>=, >, <=, <).
+- ``asof_join`` / ``asof_join_same_source``: union (or one tagged scan)
+  + one window ``last(struct, ignorenulls)`` — a single shuffle on the
+  equi-keys, scales to arbitrarily large both-sides (no pandas
+  ``merge_asof``, no broadcast requirement, no per-group driver loop).
+  Handles all four inequalities (>=, >, <=, <).
 - ``any_join``: right side deduplicated to one row per key with a
   deterministic tie-break, then a plain equi-join.
 - ``array_join``: explode / explode_outer (+ positions) over one or more
@@ -29,6 +30,56 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 _ASOF_INEQUALITIES = (">=", ">", "<=", "<")
+_LEFT_SIDE = 1
+
+
+def _asof_side(inequality: str, how: str) -> int:
+    """Validate the arguments; return the right rows' side tag.  At
+    equal ts a right row must sort BEFORE the left row (0) for the
+    inclusive variants, so the running last() sees it, and AFTER it (2)
+    for the strict ones, so it does not."""
+    if inequality not in _ASOF_INEQUALITIES:
+        raise ValueError(f"inequality must be one of {_ASOF_INEQUALITIES}")
+    if how not in ("inner", "left"):
+        raise ValueError("how must be 'inner' or 'left'")
+    return 2 if inequality in (">", "<") else 0
+
+
+def _check_clash(left_names, right_names) -> None:
+    left_names = set(left_names)
+    clash = [v for v in right_names if v in left_names]
+    if clash:
+        raise ValueError(f"ASOF right values {clash} clash with left columns")
+
+
+def _asof_core(tagged: DataFrame, on: list, inequality: str,
+               how: str) -> DataFrame:
+    """The one ASOF window.  ``tagged`` holds ``on``, ``__asof_ts``,
+    ``__side``, the left outputs and ``__r``: one struct of every right
+    output on right rows, NULL on left rows.  A running
+    ``last(__r, ignorenulls)`` over (ts, side) hands each left row its
+    nearest visible right row whole, so output columns never mix two
+    right rows, and an inner match is ``__r IS NOT NULL`` even when
+    every right value is NULL.  Right rows with a NULL ts or key are
+    dropped and NULLs sort first, so a NULL ts or key on either side
+    never matches.
+    ``<=``/``<`` (nearest *future* right row) reverse the ts order
+    instead of negating timestamps."""
+    ts = F.col("__asof_ts")
+    ts = ts.asc_nulls_first() if inequality in (">=", ">") else ts.desc_nulls_first()
+    w = (Window.partitionBy(*on).orderBy(ts, "__side")
+         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
+    side = F.col("__side") == _LEFT_SIDE
+    valid = F.col("__asof_ts").isNotNull()
+    for k in on:
+        valid = valid & F.col(k).isNotNull()
+    out = (tagged.filter(side | valid)
+           .withColumn("__r", F.last("__r", ignorenulls=True).over(w))
+           .filter(side))
+    if how == "inner":
+        out = out.filter(F.col("__r").isNotNull())
+    keep = [c for c in tagged.columns if c not in ("__asof_ts", "__side", "__r")]
+    return out.select(*keep, "__r.*")
 
 
 def asof_join(
@@ -45,79 +96,30 @@ def asof_join(
     equi-keys and the nearest ``right_ts`` satisfying
     ``left_ts <inequality> right_ts``.
 
-    Implementation (scale-first): tag both sides, union, and take a
-    running ``last(..., ignorenulls=True)`` over a window partitioned by
-    the equi-keys and ordered by (ts, side).  One shuffle on ``on``;
-    no assumption that either side fits in memory.  For ``<=``/``<``
-    (nearest *future* right row) the ordering is reversed instead of
-    negating timestamps, so the same machinery serves all four
-    inequalities.
+    Scale-first: tag both sides, union, and run :func:`_asof_core`'s
+    window — one shuffle on ``on``, no assumption that either side fits
+    in memory.  Outputs are ``on``, the other left columns, then
+    ``right_values`` (default: right columns other than ``on`` and
+    ``right_ts``); a right value named like a left column raises
+    ``ValueError``.
 
     ``how``: 'inner' drops left rows with no match, 'left' keeps them
     with nulls (reference ASOF LEFT JOIN).
     """
-    if inequality not in _ASOF_INEQUALITIES:
-        raise ValueError(f"inequality must be one of {_ASOF_INEQUALITIES}")
-    if how not in ("inner", "left"):
-        raise ValueError("how must be 'inner' or 'left'")
+    right_side = _asof_side(inequality, how)
     right_ts = right_ts or left_ts
     on = list(on)
     if right_values is None:
         right_values = [c for c in right.columns if c not in on and c != right_ts]
-
-    backward = inequality in (">=", ">")   # nearest right at-or-before left
-    strict = inequality in (">", "<")
-
-    # Side tag: the right row must sort BEFORE the left row at equal ts
-    # for the inclusive variants (so it is visible in the running
-    # last()), and AFTER it for strict variants (so it is not).
-    right_side = 0 if not strict else 2
-    LEFT_SIDE = 1
-
-    ts_out = "__asof_ts"
-    rows = []
-    l_tagged = left.withColumn(ts_out, F.col(left_ts)).withColumn("__side", F.lit(LEFT_SIDE))
-    for v in right_values:
-        l_tagged = l_tagged.withColumn(f"__r_{v}", F.lit(None).cast(right.schema[v].dataType))
-    rows.append(l_tagged.select(*on, ts_out, "__side",
-                                *[c for c in left.columns if c not in on],
-                                *[f"__r_{v}" for v in right_values]))
-
-    r_tagged = right.withColumn(ts_out, F.col(right_ts)).withColumn("__side", F.lit(right_side))
-    for c in left.columns:
-        if c not in on:
-            r_tagged = r_tagged.withColumn(c, F.lit(None).cast(left.schema[c].dataType))
-    for v in right_values:
-        r_tagged = r_tagged.withColumn(f"__r_{v}", F.col(v))
-    rows.append(r_tagged.select(*on, ts_out, "__side",
-                                *[c for c in left.columns if c not in on],
-                                *[f"__r_{v}" for v in right_values]))
-
-    unioned = rows[0].unionByName(rows[1])
-
-    order = [F.col(ts_out), F.col("__side")]
-    if not backward:
-        order = [F.col(ts_out).desc(), F.col("__side")]
-    w = (Window.partitionBy(*on).orderBy(*order)
-         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-
-    matched = unioned
-    for v in right_values:
-        matched = matched.withColumn(f"__r_{v}", F.last(f"__r_{v}", ignorenulls=True).over(w))
-
-    out = (matched.filter(F.col("__side") == LEFT_SIDE)
-           .drop("__side", ts_out))
-    for v in right_values:
-        out = out.withColumnRenamed(f"__r_{v}", v)
-    if how == "inner":
-        # A left row with no visible right row has all-null right values.
-        cond = None
-        for v in right_values:
-            c = F.col(v).isNotNull()
-            cond = c if cond is None else (cond | c)
-        if cond is not None:
-            out = out.filter(cond)
-    return out
+    _check_clash(left.columns, right_values)
+    l_tagged = left.select(*on, F.col(left_ts).alias("__asof_ts"),
+                           F.lit(_LEFT_SIDE).alias("__side"),
+                           *[c for c in left.columns if c not in on])
+    r_tagged = right.select(*on, F.col(right_ts).alias("__asof_ts"),
+                            F.lit(right_side).alias("__side"),
+                            F.struct(*right_values).alias("__r"))
+    return _asof_core(l_tagged.unionByName(r_tagged, allowMissingColumns=True),
+                      on, inequality, how)
 
 
 def asof_join_same_source(
@@ -131,68 +133,36 @@ def asof_join_same_source(
     inequality: str = ">=",
     how: str = "inner",
 ) -> DataFrame:
-    """ASOF join whose two sides are DISJOINT filters of the SAME
-    DataFrame — the common event-log case (purchases vs clicks of one
-    events table).  Semantically identical to
-    ``asof_join(df.filter(left_filter)…, df.filter(right_filter)…)``
-    but built from ONE scan: the generic form reads the source twice
-    (one FileScan per side) before unioning; here rows are side-tagged
-    conditionally, halving scan I/O (guide §8: the optimizer cannot
-    prove the two scans are one).  r14 interleaved driver-protocol A/B
-    on join_asof_backward: 1.087 s → 0.930 s (median of 7,
-    row-identical).
+    """ASOF join whose two sides are filters of the SAME DataFrame — the
+    common event-log case (purchases vs clicks of one events table).
+    Built from ONE scan: ``asof_join(df.filter(l)…, df.filter(r)…)``
+    reads the source twice (one FileScan per side) before unioning;
+    here rows are side-tagged conditionally (guide §8: the optimizer
+    cannot prove the two scans are one).  r14 interleaved
+    driver-protocol A/B on join_asof_backward: 1.087 s → 0.930 s
+    (median of 7, row-identical).
 
     ``left_values`` / ``right_values`` map output column name → source
-    column; left outputs are NULL on right rows and vice versa, and the
-    same running ``last(ignorenulls)`` window as :func:`asof_join`
-    attaches the nearest right row.  Filters MUST be disjoint (a row
-    matching both would be tagged left only, where the union form
-    would duplicate it).
+    column.  A NULL filter counts as false.  A row matching both
+    filters is a left row only; it is not also a right row, as it would
+    be in the two-scan form.  Equal to the two-scan form whenever the
+    filters are disjoint.
     """
-    if inequality not in _ASOF_INEQUALITIES:
-        raise ValueError(f"inequality must be one of {_ASOF_INEQUALITIES}")
-    if how not in ("inner", "left"):
-        raise ValueError("how must be 'inner' or 'left'")
+    right_side = _asof_side(inequality, how)
     on = list(on)
-    backward = inequality in (">=", ">")
-    strict = inequality in (">", "<")
-    LEFT_SIDE = 1
-    right_side = 0 if not strict else 2  # see asof_join's tag rationale
-
-    both = df.filter(left_filter | right_filter)
-    is_left = left_filter
-    cols = [*on,
-            F.col(ts_col).alias("__asof_ts"),
-            F.when(is_left, F.lit(LEFT_SIDE)).otherwise(F.lit(right_side))
-            .alias("__side")]
-    cols += [F.when(is_left, F.col(src)).alias(out)
-             for out, src in left_values.items()]
-    cols += [F.when(~is_left, F.col(src)).alias(f"__r_{out}")
-             for out, src in right_values.items()]
-    unioned = both.select(*cols)
-
-    order = [F.col("__asof_ts"), F.col("__side")]
-    if not backward:
-        order = [F.col("__asof_ts").desc(), F.col("__side")]
-    w = (Window.partitionBy(*on).orderBy(*order)
-         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-
-    matched = unioned
-    for out in right_values:
-        matched = matched.withColumn(
-            f"__r_{out}", F.last(f"__r_{out}", ignorenulls=True).over(w))
-    out_df = (matched.filter(F.col("__side") == LEFT_SIDE)
-              .drop("__side", "__asof_ts"))
-    for out in right_values:
-        out_df = out_df.withColumnRenamed(f"__r_{out}", out)
-    if how == "inner":
-        cond = None
-        for out in right_values:
-            c = F.col(out).isNotNull()
-            cond = c if cond is None else (cond | c)
-        if cond is not None:
-            out_df = out_df.filter(cond)
-    return out_df
+    _check_clash([*on, *left_values], right_values)
+    is_left = F.coalesce(left_filter, F.lit(False))
+    is_right = F.coalesce(right_filter, F.lit(False)) & ~is_left
+    # the raw filters keep the same rows and push down to the scan
+    tagged = df.filter(left_filter | right_filter).select(
+        *on, F.col(ts_col).alias("__asof_ts"),
+        F.when(is_left, _LEFT_SIDE).otherwise(right_side).alias("__side"),
+        *[F.when(is_left, F.col(src)).alias(out)
+          for out, src in left_values.items()],
+        F.when(is_right, F.struct(*[F.col(src).alias(out)
+                                    for out, src in right_values.items()]))
+        .alias("__r"))
+    return _asof_core(tagged, on, inequality, how)
 
 
 def any_join(

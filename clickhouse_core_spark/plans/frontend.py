@@ -9462,9 +9462,12 @@ def _rewrite_asof_join(spark, sql: str) -> str:
             ineq = (lcol, op, rcol)
     if ineq is None:
         raise NotImplementedError("ASOF JOIN needs one inequality condition")
-    out = asof_join(spark.table(lt), spark.table(rt), on=on,
-                    left_ts=ineq[0], right_ts=ineq[2],
-                    inequality=ineq[1], how=how)
+    left, right = spark.table(lt), spark.table(rt)
+    # An unqualified name present on both sides resolves to the left one.
+    values = [c for c in right.columns
+              if c not in on and c != ineq[2] and c not in left.columns]
+    out = asof_join(left, right, on=on, left_ts=ineq[0], right_ts=ineq[2],
+                    inequality=ineq[1], right_values=values, how=how)
     view = f"__asof_{lt}_{rt}"
     out.createOrReplaceTempView(view)
     return sql[:m.start()] + f"FROM {view}" + sql[m.end():]

@@ -330,6 +330,21 @@ def test_asof_join_sql(spark):
     assert got == [(1, 10.0, "a"), (1, 20.0, "b"), (2, 15.0, None)]
 
 
+def test_asof_join_sql_shared_column_keeps_left(spark):
+    from clickhouse_core_spark.plans import ch_sql
+    spark.createDataFrame([(1, 10.0, "l1"), (1, 20.0, "l2")],
+                          "k int, t double, tag string"
+                          ).createOrReplaceTempView("asof_sl")
+    spark.createDataFrame([(1, 5.0, "r1", 7)],
+                          "k int, t double, tag string, v int"
+                          ).createOrReplaceTempView("asof_sr")
+    rows = ch_sql(spark, """
+        SELECT k, t, tag, v FROM asof_sl ASOF JOIN asof_sr
+        ON asof_sl.k = asof_sr.k AND asof_sl.t >= asof_sr.t
+        ORDER BY t""").collect()
+    assert [tuple(r) for r in rows] == [(1, 10.0, "l1", 7), (1, 20.0, "l2", 7)]
+
+
 def test_any_join_sql_and_global(spark):
     from clickhouse_core_spark.plans import ch_sql, translate_ch_sql
     spark.createDataFrame([(1, "x"), (2, "y")],
