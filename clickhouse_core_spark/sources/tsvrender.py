@@ -22,8 +22,7 @@ written in.  Re-implemented from the publicly documented text rules:
     UInt8-carried predicates arrive as int and render ``1``/``0``
 
 This doubles as the engine's ``FORMAT TabSeparated`` display renderer
-(`format_tsv`) and as the comparator the corpus golden-diff harness
-(scripts/session_coverage.py) uses to grade answers against the
+(`format_tsv`) and as the comparator for grading answers against the
 reference's own expected output.
 """
 
