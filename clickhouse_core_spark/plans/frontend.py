@@ -10616,7 +10616,7 @@ def _ch_sql_impl(spark, sql: str,
             table.optimize_deduplicate(by)
         else:
             table.compact()
-        _refresh_table_views(spark, m.group(1), table)
+        _register_table_views(spark, m.group(1), table, tables)
         return None
 
     # SYSTEM DROP QUERY CACHE (QueryCache.h)
@@ -10662,7 +10662,7 @@ def _ch_sql_impl(spark, sql: str,
             table.delete_where_lightweight(pred)
         else:
             table.delete_where(pred)
-        _refresh_table_views(spark, name, table)
+        _register_table_views(spark, name, table, tables)
         return None
     m = _UPDATE_RE.match(text)
     if m:
@@ -10693,7 +10693,7 @@ def _ch_sql_impl(spark, sql: str,
             return None
         table.update_where(
             F.expr(_bool_pred_sql(_translate_expr(cond))), assignments)
-        _refresh_table_views(spark, name, table)
+        _register_table_views(spark, name, table, tables)
         return None
 
     m = re.match(r"^ALTER\s+TABLE\s+`?(\w+)`?\s+(.*)$", text,
@@ -12758,10 +12758,29 @@ def _utility_statement(spark, text: str, tables):
             spark.catalog.tableExists(name)
         if not known and not m.group(1):
             raise ValueError(f"DROP TABLE: unknown table {name!r}")
-        if tables is not None:
-            tables.pop(name, None)
-            (tables.get("__alias__") or {}).pop(name, None)
         spark.catalog.dropTempView(name)
+        spark.catalog.dropTempView(f"{name}__final")
+        t = tables.pop(name, None) if tables is not None else None
+        amap = (tables or {}).get("__alias__") or {}
+        amap.pop(name, None)
+        # a Replicated replica sharing the storage keeps it, as a table
+        # of its own; Distributed aliases read through `name` and stay
+        # (they fail until `name` exists again, as in the reference)
+        heirs = [a for a, v in (tables or {}).items()
+                 if t is not None and v is t]
+        for a in heirs:
+            amap.pop(a, None)
+            _register_table_views(spark, a, t, tables)
+        import os as _os
+        path = getattr(t, "path", None)
+        # the reference removes the data on DROP (at once with SYNC);
+        # storage another name still uses (a replica, or a new table
+        # under the name this one was renamed from) stays
+        if path and _os.path.dirname(path) == _default_table_dir() \
+                and all(getattr(v, "path", None) != path
+                        for v in (tables or {}).values()):
+            import shutil as _shutil
+            _shutil.rmtree(path, ignore_errors=True)
         return None
 
     m = re.match(r"^RENAME\s+TABLE\s+`?(\w+)`?\s+TO\s+`?(\w+)`?\s*$",
@@ -12808,7 +12827,7 @@ def _utility_statement(spark, text: str, tables):
             for attr in ("obj_trees", "obj_ch_types"):
                 if getattr(t, attr, None):
                     getattr(t, attr).clear()
-            _refresh_table_views(spark, name, t)
+            _register_table_views(spark, name, t, tables)
             return None
         df = _resolve_view(spark, name, tables)
         if df is None:
@@ -13805,7 +13824,7 @@ def _create_table_statement(spark, text: str, tables, sample_by=None):
             t.insert(df)
             if tables is not None:
                 tables[name] = t
-            t.read().createOrReplaceTempView(name)
+            _register_table_views(spark, name, t, tables)
         else:
             df.createOrReplaceTempView(name)
         return None
@@ -14140,6 +14159,8 @@ def _alter_table_statement(spark, name: str, body: str, tables):
             continue
         ops.append(o)
     for op in ops:
+        if df is None:                # an earlier op rewrote the parts
+            df = t.read()
         o = op.strip()
         m = re.match(r"(?is)^(ADD|DROP|MODIFY|CLEAR|MATERIALIZE)\s+"
                      r"STATISTICS?\s+(?:IF\s+(?:NOT\s+)?EXISTS\s+)?"
@@ -14292,8 +14313,7 @@ def _alter_table_statement(spark, name: str, body: str, tables):
                 getattr(t, "obj_ch_types", {}).pop(cname, None)
                 t.json_cols.add(cname)
                 t.insert(mat)
-                df = t.read()
-                df.createOrReplaceTempView(name)
+                df = None
                 continue
             _rec8 = ((tables or {}).get("__decl__") or {}).get(name)
             if t is None and _rec8 and re.match(r"(?i)^JSON\b", rest) \
@@ -14372,7 +14392,7 @@ def _alter_table_statement(spark, name: str, body: str, tables):
                 t.replace_partition(src, val)
             else:
                 t.attach_partition_from(src, val)
-            df = t.read()
+            df = None
             continue
         m = re.match(r"(?is)^(DETACH|ATTACH)\s+(PART|PARTITION)\s+"
                      r"(?:ID\s+)?('[^']*'|[\w.-]+)$", o)
@@ -14384,7 +14404,7 @@ def _alter_table_statement(spark, name: str, body: str, tables):
             val = m.group(3).strip("'")
             op = (m.group(1) + "_" + m.group(2)).lower()
             getattr(t, op)(val)
-            df = t.read()
+            df = None
             continue
         m = re.match(r"(?is)^MOVE\s+PARTITION\s+(?:ID\s+)?"
                      r"('[^']*'|[\w.-]+)\s+TO\s+TABLE\s+`?(\w+)`?$", o)
@@ -14394,8 +14414,8 @@ def _alter_table_statement(spark, name: str, body: str, tables):
                 raise ValueError("ALTER MOVE PARTITION needs managed "
                                  "tables")
             t.move_partition_to(dst, m.group(1).strip("'"))
-            dst.read().createOrReplaceTempView(m.group(2))
-            df = t.read()
+            _register_table_views(spark, m.group(2), dst, tables)
+            df = None
             continue
         m = re.match(r"(?is)^DROP\s+(?:PARTITION|PART)\s+(?:ID\s+)?"
                      r"('[^']*'|[\w.-]+)$", o)
@@ -14404,7 +14424,7 @@ def _alter_table_statement(spark, name: str, body: str, tables):
                 raise ValueError("ALTER DROP PARTITION needs a "
                                  "managed table")
             t.drop_partition(m.group(1).strip("'"))
-            df = t.read()
+            df = None
             continue
         m = re.match(r"(?is)^MATERIALIZE\s+COLUMN\s+`?([\w.]+)`?$",
                      o)
@@ -14420,7 +14440,7 @@ def _alter_table_statement(spark, name: str, body: str, tables):
             t.update_where(
                 F.lit(True),
                 {m.group(1): F.expr(t.column_defaults[m.group(1)])})
-            df = t.read()
+            df = None
             continue
         m = re.match(r"(?is)^ADD\s+PROJECTION\s+(?:IF\s+NOT\s+"
                      r"EXISTS\s+)?`?(\w+)`?", o)
@@ -14468,7 +14488,7 @@ def _alter_table_statement(spark, name: str, body: str, tables):
                 else:
                     pred = F.lit(True)
                 t.update_where(pred, {cname: expr})
-                df = t.read()
+                df = None
             continue
         if re.match(r"(?is)^(MATERIALIZE\s+COLUMN|COMMENT\s+COLUMN|"
                     r"MODIFY\s+(TTL|SETTING|ORDER\s+BY|QUERY)|"
@@ -14484,13 +14504,11 @@ def _alter_table_statement(spark, name: str, body: str, tables):
             continue
         raise NotImplementedError(f"ALTER operation not mapped: "
                                   f"{o[:60]!r}")
-    df.createOrReplaceTempView(name)
-    if t is not None and hasattr(t, "_apply_engine"):
-        try:
-            t.read(final=True).createOrReplaceTempView(f"{name}__final")
-        except ValueError:
-            pass                      # part-less table; CREATE-time view stands
-    _refresh_alias_views(spark, name, tables)
+    if hasattr(t, "read_views"):
+        _register_table_views(spark, name, t, tables, plain=df)
+    else:
+        df.createOrReplaceTempView(name)
+        _refresh_alias_views(spark, name, tables)
     return None
 
 
@@ -14527,36 +14545,39 @@ def _refresh_alias_views(spark, name: str, tables) -> None:
                 pass
 
 
-def _refresh_table_views(spark, name: str, t) -> None:
-    """Re-register the ``name`` / ``name__final`` temp views after a
-    mutation replaced part files (a stale view holds the old file
-    list)."""
-    if t is None or not hasattr(t, "_apply_engine"):
+def _register_table_views(spark, name: str, t, tables=None,
+                          plain=None) -> None:
+    """Register the ``name`` / ``name__final`` views of table ``t``
+    from ONE read (``MergeTreeTable.read_views``; a stale view holds
+    the old file list), then the alias views over ``name``.
+    always_final tables (EmbeddedRocksDB key-value semantics) expose
+    FINAL as ``name``; ``plain`` overrides the ``name`` view (ALTER
+    column ops transform the registered frame).  A Join-engine table
+    has one view, its stored side."""
+    if not hasattr(t, "read_views"):
+        if hasattr(t, "read"):
+            t.read().createOrReplaceTempView(name)
+            _refresh_alias_views(spark, name, tables)
         return
     try:
-        t.read().createOrReplaceTempView(name)
-        t.read(final=True).createOrReplaceTempView(f"{name}__final")
-        return
+        raw, final = t.read_views()
     except ValueError:
-        pass                          # part-less after mutation
-    # TRUNCATE / DELETE-all left zero parts: a stale view would die
-    # FAILED_READ_FILE on the next SELECT (reference drops the data
-    # but keeps the table readable as empty) — register an empty
-    # typed view from the declared DDL or the old view's schema
-    empty = None
-    ddl = getattr(t, "schema_ddl", None)
-    if ddl:
+        # TRUNCATE / DELETE-all left zero parts: the reference keeps
+        # the table readable as empty — an empty view typed by the
+        # declared DDL, else by the old view
         try:
-            empty = spark.createDataFrame([], ddl)
+            raw = spark.createDataFrame([], t.schema_ddl)
         except Exception:
-            empty = None
-    if empty is None:
-        try:
-            empty = spark.table(name).limit(0).localCheckpoint(eager=True)
-        except Exception:
-            return
-    empty.createOrReplaceTempView(name)
-    empty.createOrReplaceTempView(f"{name}__final")
+            try:
+                raw = spark.table(name).limit(0).localCheckpoint(eager=True)
+            except Exception:
+                return
+        final = raw
+    if getattr(t, "always_final", False):
+        raw = final
+    (raw if plain is None else plain).createOrReplaceTempView(name)
+    final.createOrReplaceTempView(f"{name}__final")
+    _refresh_alias_views(spark, name, tables)
 
 
 def _target_schema(spark, name: str, t):
@@ -14598,8 +14619,7 @@ def _append_to_table(spark, name: str, df, tables, _mv_depth: int = 0):
         # the frame as-is, exactly the pre-session behavior
         if t is not None and hasattr(t, "insert"):
             t.insert(df)
-            t.read().createOrReplaceTempView(name)
-            _refresh_alias_views(spark, name, tables)
+            _register_table_views(spark, name, t, tables)
             _fire_mv_triggers(spark, name, df, tables,
                               depth=_mv_depth)
             return None
@@ -14684,32 +14704,7 @@ def _append_to_table(spark, name: str, df, tables, _mv_depth: int = 0):
     if t is not None and hasattr(t, "insert"):
         _check_object_insert_compat(t, aligned)
         t.insert(aligned)
-        # always_final tables (EmbeddedRocksDB key-value semantics)
-        # expose the deduplicated state as THE table
-        view_df = (t.read(final=True)
-                   if getattr(t, "always_final", False) else t.read())
-        # hive partition discovery appends partition columns LAST;
-        # the view keeps the DECLARED column order
-        declared = [f.name for f in schema.fields
-                    if f.name in view_df.columns]
-        if declared and list(view_df.columns) != declared \
-                and set(declared) == set(view_df.columns):
-            view_df = view_df.select(
-                *[F.col(f"`{c}`") for c in declared])
-        view_df.createOrReplaceTempView(name)
-        if hasattr(t, "_apply_engine"):
-            try:
-                # plain MergeTree FINAL is identity; engine variants
-                # get their merge semantics applied at read time
-                t.read(final=True) \
-                    .createOrReplaceTempView(f"{name}__final")
-            except ValueError:
-                pass                  # part-less (nothing inserted)
-        # replica/Distributed alias views pin their creation-time
-        # schema; a first INSERT that DEFINES the schema (schema-less
-        # CREATE) must re-register them (byte_identical replicated
-        # pair golden)
-        _refresh_alias_views(spark, name, tables)
+        _register_table_views(spark, name, t, tables)
     else:
         decl_rec = ((tables or {}).get("__decl__") or {}).get(name) \
             or {}

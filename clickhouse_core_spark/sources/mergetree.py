@@ -162,6 +162,17 @@ class MergeTreeTable:
         # NULLs from the expression (which may reference other
         # inserted columns, the materialized-default contract)
         self.column_defaults = dict(column_defaults or {})
+        # pinned part schemas: part path -> (top-level entries, Spark
+        # schema).  A part is immutable, so its Parquet schema is
+        # inferred once (one Spark job per part) and reused while the
+        # part's entries stay the same; dropping, detaching or
+        # attaching a hive slice changes the entries and re-infers.
+        self._part_schemas: dict[str, tuple[tuple, StructType]] = {}
+        # write-schema memo (unpartitioned parts only): the DataFrame
+        # schema a part was written with -> the schema Spark infers for
+        # such a part; parts not yet inferred wait in _unmemoed
+        self._write_schemas: dict[str, StructType] = {}
+        self._unmemoed: dict[str, str] = {}
         os.makedirs(path, exist_ok=True)
         self._write_meta()
 
@@ -208,14 +219,18 @@ class MergeTreeTable:
             if d.startswith("part-") and os.path.isdir(os.path.join(self.path, d)))
 
     def insert(self, df: DataFrame,
-               write_options: dict | None = None) -> str:
+               write_options: dict | None = None,
+               part_name: str | None = None) -> str:
         """Write a new immutable part: partitioned by ``partition_by``,
         sorted by ``order_by`` within each file (gives Parquet row-group
         min/max stats the same pruning power as the reference's primary
         index).  ``write_options`` passes extra parquet writer options
         (e.g. a small ``parquet.block.size`` to force multiple row
-        groups per file — the index-granularity knob)."""
-        part_dir = os.path.join(self.path, f"part-{int(time.time() * 1e6):016x}")
+        groups per file — the index-granularity knob).  ``part_name``
+        overrides the time-ordered default name (mutations keep their
+        source part's place in the part order)."""
+        part_dir = os.path.join(
+            self.path, part_name or f"part-{int(time.time() * 1e6):016x}")
         # declared DateTime64(p) columns TRUNCATE inserted values to
         # their scale (DataTypeDateTime64 conversion; golden 02997 —
         # a DateTime64(0) column stores whole seconds)
@@ -262,6 +277,22 @@ class MergeTreeTable:
         if plain_parts:
             w = w.partitionBy(*plain_parts)
         w.parquet(part_dir)
+        if plain_parts:
+            if not self._part_sig(part_dir):
+                # an empty partitioned write leaves no file to read a
+                # schema from: the part holds nothing, so it is no part
+                self._drop_parts([part_dir])
+                return part_dir
+        else:
+            # hive partition column types come from directory values,
+            # so only unpartitioned parts share a write-schema memo
+            wkey = df.schema.json()
+            known = self._write_schemas.get(wkey)
+            if known is None:
+                self._unmemoed[part_dir] = wkey
+            else:
+                self._part_schemas[part_dir] = (self._part_sig(part_dir),
+                                                known)
         if self.token_index_cols:
             self._write_token_index(part_dir)
         if self.gin_index_cols:
@@ -523,30 +554,54 @@ class MergeTreeTable:
 
     # ----------------------------------------------------------------- reads
 
-    def read_raw(self, with_seq: bool = False) -> DataFrame:
+    @staticmethod
+    def _part_sig(part: str) -> tuple:
+        """A part's identity for the pinned schema: its top-level data
+        entries (data files, or ``col=value`` hive slices).  Names that
+        start with ``_`` or ``.`` (``_SUCCESS``, CRCs, delete masks,
+        index sidecars) are invisible to Spark's reader, so they are
+        left out too."""
+        return tuple(sorted(e for e in os.listdir(part)
+                            if not e.startswith(("_", "."))))
+
+    def _read_part(self, part: str) -> DataFrame:
+        """One part as a DataFrame.  Per-part ``basePath`` keeps hive
+        partition discovery local to the part; the schema is inferred
+        (one Spark job) only the first time a part is read with these
+        entries, then passed in."""
+        reader = self.spark.read.option("basePath", part)
+        sig = self._part_sig(part)
+        pinned = self._part_schemas.get(part)
+        if pinned is not None and pinned[0] == sig:
+            return reader.schema(pinned[1]).parquet(part)
+        df = reader.parquet(part)
+        self._part_schemas[part] = (sig, df.schema)
+        wkey = self._unmemoed.pop(part, None)
+        if wkey is not None:
+            self._write_schemas.setdefault(wkey, df.schema)
+        return df
+
+    def read_raw(self, with_seq: bool = False,
+                 parts: Sequence[str] | None = None) -> DataFrame:
         """All appended rows, engine semantics NOT applied (the
         reference's default non-FINAL read); lightweight-delete masks
         are applied (the reference's implicit `_row_exists = 1`
         filter).  ``with_seq`` adds a ``__part_seq`` column (the
         part's insertion-order index) so FINAL merges can break
         version ties by part recency like the reference's
-        last-in-selection rule."""
-        parts = self.parts()
+        last-in-selection rule.  ``parts`` restricts the read to
+        those parts (a per-part mutation)."""
+        parts = self.parts() if parts is None else list(parts)
         if not parts:
             raise ValueError(f"table at {self.path} has no parts")
         if len(parts) == 1:
-            df = self.spark.read.option("basePath", parts[0]) \
-                .parquet(parts[0])
+            df = self._read_part(parts[0])
             if with_seq:
                 df = df.withColumn("__part_seq", F.lit(0))
         else:
-            # per-part basePath keeps hive partition discovery local to
-            # each part (a multi-root read would see the part-* level
-            # as conflicting structures); unionByName tolerates
-            # ALTER-evolved schemas, missing columns fill NULL and the
-            # view layer applies declared DEFAULTs
-            dfs = [self.spark.read.option("basePath", p).parquet(p)
-                   for p in parts]
+            # unionByName tolerates ALTER-evolved schemas: missing
+            # columns fill NULL and the declared DEFAULTs apply below
+            dfs = [self._read_part(p) for p in parts]
             # delete masks anti-join on _metadata, which only resolves
             # on a DIRECT file-scan relation — apply per part BEFORE
             # the union (golden 02864: INSERT after a lightweight
@@ -559,84 +614,108 @@ class MergeTreeTable:
             df = dfs[0]
             for d in dfs[1:]:
                 df = df.unionByName(d, allowMissingColumns=True)
-        # ALTER-evolved parts: a part written before ADD COLUMN lacks
-        # the column — unionByName filled NULL, but the reference
-        # reads the declared DEFAULT, else the TYPE default, for
-        # non-Nullable columns (addMissingDefaults.cpp; golden 00446)
+        fields = {f.name: f for f in df.schema.fields}
+        names = list(fields)
         ddl = getattr(self, "schema_ddl", None)
         if ddl:
-            decl_cols = []
-            for c in _split_ddl_columns(ddl):
-                toks = c.strip().split(None, 1)
-                if len(toks) == 2:
-                    decl_cols.append((toks[0].strip("`"), toks[1]))
-            nullable = getattr(self, "nullable_cols", frozenset())
-            defaults = self.column_defaults or {}
-            have = {f.name for f in df.schema.fields}
-            for cname, ctype in decl_cols:
-                if cname not in have:
-                    # ALTER-ADDed column present in NO part yet:
-                    # materialize the declared/type default so views
-                    # refreshed from read() keep the full schema
-                    # (golden 00721 byte_identical)
-                    try:
-                        dt2 = self.spark.createDataFrame(
-                            [], f"`{cname}` {ctype}").schema[0] \
-                            .dataType
-                    except Exception:
-                        continue
-                    dflt2 = defaults.get(cname) \
-                        or _type_default_sql(dt2) or "NULL"
-                    df = df.withColumn(
-                        cname, F.expr(dflt2).cast(dt2))
-                    have.add(cname)
-                    continue
-                if cname in nullable:
-                    continue
-                fld = df.schema[cname]
-                if not fld.nullable:
-                    continue
-                dflt = defaults.get(cname)
-                if dflt is None:
-                    dflt = _type_default_sql(fld.dataType)
-                if dflt is not None:
-                    df = df.withColumn(
-                        cname, F.coalesce(
-                            F.col(f"`{cname}`"),
-                            F.expr(dflt).cast(fld.dataType)))
-            # hive partition columns come back APPENDED after the data
-            # columns — restore the declared DDL order so `SELECT *`
-            # matches the CREATE (reference column order is
-            # declaration order; golden 01114)
-            declared = [c for c, _t in decl_cols]
-            ordered = [c for c in declared if c in have] \
-                + [c for c in df.columns if c not in declared]
-            if ordered != df.columns:
-                df = df.select(*[F.col(f"`{c}`") for c in ordered])
+            df, names = self._fill_declared(df, ddl, fields)
         # declared DateTime64(p) columns carry their scale as field
         # metadata so renderers print EXACTLY p fractional digits
         # (golden 02997; metadata survives SELECT * projections)
-        scales = getattr(self, "dt64_scales", None)
-        if scales:
+        scales = getattr(self, "dt64_scales", None) or {}
+        if names != list(fields) or scales:
             df = df.select(*[
                 (F.col(f"`{c}`").alias(c, metadata={
                     "ch_dt64_scale": scales[c]})
                  if c in scales else F.col(f"`{c}`"))
-                for c in df.columns])
+                for c in names])
         if len(parts) == 1:
             df = self._apply_delete_masks(df, parts)
         return df
 
+    def _fill_declared(self, df: DataFrame, ddl: str,
+                       fields: dict) -> tuple[DataFrame, list]:
+        """ALTER-evolved parts: a part written before ADD COLUMN lacks
+        the column — unionByName filled NULL, but the reference reads
+        the declared DEFAULT, else the TYPE default, for non-Nullable
+        columns (addMissingDefaults.cpp; golden 00446).  A declared
+        column present in NO part yet is materialized from its
+        default so views keep the full schema (golden 00721).  Type
+        defaults are constants and go in one ``withColumns``; declared
+        DEFAULT expressions may read other columns, so they follow
+        one by one in declaration order.  Returns the frame and its
+        column names in declared order (hive partition columns come
+        back APPENDED after the data columns; reference column order
+        is declaration order, golden 01114)."""
+        decl_cols = []
+        for c in _split_ddl_columns(ddl):
+            toks = c.strip().split(None, 1)
+            if len(toks) == 2:
+                decl_cols.append((toks[0].strip("`"), toks[1]))
+        nullable = getattr(self, "nullable_cols", frozenset())
+        defaults = self.column_defaults or {}
+        names = list(fields)
+        consts, exprs = {}, []
+        for cname, ctype in decl_cols:
+            fld = fields.get(cname)
+            if fld is None:
+                try:
+                    dt = self.spark.createDataFrame(
+                        [], f"`{cname}` {ctype}").schema[0].dataType
+                except Exception:
+                    continue
+                names.append(cname)
+                if defaults.get(cname):
+                    exprs.append((cname, F.expr(defaults[cname]).cast(dt)))
+                else:
+                    consts[cname] = F.expr(
+                        _type_default_sql(dt) or "NULL").cast(dt)
+                continue
+            if cname in nullable or not fld.nullable:
+                continue
+            dflt = defaults.get(cname)
+            if dflt is not None:
+                exprs.append((cname, F.coalesce(
+                    F.col(f"`{cname}`"),
+                    F.expr(dflt).cast(fld.dataType))))
+                continue
+            dflt = _type_default_sql(fld.dataType)
+            if dflt is not None:
+                consts[cname] = F.coalesce(
+                    F.col(f"`{cname}`"), F.expr(dflt).cast(fld.dataType))
+        if consts:
+            df = df.withColumns(consts)
+        for cname, col in exprs:
+            df = df.withColumn(cname, col)
+        declared = [c for c, _t in decl_cols]
+        have = set(names)
+        return df, ([c for c in declared if c in have]
+                    + [c for c in names if c not in declared])
+
     def read(self, final: bool = False) -> DataFrame:
         if not final or self.engine == "merge_tree":
             return self._wrap_object_cols(self.read_raw())
+        return self._final_of(
+            self.read_raw(with_seq=self.engine == "replacing"))
+
+    def read_views(self) -> tuple[DataFrame, DataFrame]:
+        """The plain and the FINAL read from ONE ``read_raw`` — what a
+        view refresh after INSERT / mutation / OPTIMIZE registers."""
+        if self.engine == "merge_tree":
+            plain = self._wrap_object_cols(self.read_raw())
+            return plain, plain
+        raw = self.read_raw(with_seq=self.engine == "replacing")
+        plain = raw.drop("__part_seq") if self.engine == "replacing" \
+            else raw
+        return self._wrap_object_cols(plain), self._final_of(raw)
+
+    def _final_of(self, raw: DataFrame) -> DataFrame:
+        out = self._apply_engine(raw)
         if self.engine == "replacing":
-            # part-recency tiebreak for equal versions (the
+            # __part_seq broke equal-version ties by part recency (the
             # reference keeps the last row in the selection)
-            out = self._apply_engine(self.read_raw(with_seq=True))
-            return self._wrap_object_cols(out.drop("__part_seq"))
-        return self._wrap_object_cols(self._apply_engine(
-            self.read_raw()))
+            out = out.drop("__part_seq")
+        return self._wrap_object_cols(out)
 
     def _wrap_object_cols(self, df: DataFrame) -> DataFrame:
         """Deprecated ``Object('json')`` columns finalize to the
@@ -725,16 +804,27 @@ class MergeTreeTable:
         new_part = self.insert(merged)
         self._drop_parts([p for p in parts if p != new_part])
 
+    def _mutate_parts(self, rewrite) -> None:
+        """Mutation analog (reference MutateTask): rewrite every part
+        on its own, in part order, through ``read_raw`` (delete masks
+        and ALTER defaults apply).  The new part is named after its
+        source plus a mutation number, which sorts right after the
+        source and before the next part, so the part-recency tie-break
+        of FINAL (and of EmbeddedRocksDB's upserts) survives."""
+        for p in self.parts():
+            base, _, n = os.path.basename(p).partition("_m")
+            self.insert(rewrite(self.read_raw(parts=[p])),
+                        part_name=f"{base}_m{int(n or 0) + 1}")
+            self._drop_parts([p])
+
     def delete_where(self, predicate: Column) -> None:
         """ALTER TABLE ... DELETE analog: rewrite parts without matching
         rows (reference lightweight delete rewrites the _row_exists mask;
         a partition rewrite is the Spark-native equivalent)."""
-        parts = self.parts()
         # delete only rows where the predicate is TRUE: NOT NULL is NULL
         # and would drop NULL-predicate rows too, so coalesce to FALSE
-        kept = self.read_raw().filter(~F.coalesce(predicate, F.lit(False)))
-        new_part = self.insert(kept)
-        self._drop_parts([p for p in parts if p != new_part])
+        self._mutate_parts(
+            lambda df: df.filter(~F.coalesce(predicate, F.lit(False))))
 
     # ------------------------------------------------ lightweight delete
 
@@ -789,12 +879,9 @@ class MergeTreeTable:
         assignment expressions applied to matching rows.  Same
         partition-rewrite shape as delete_where — mutations are
         part rewrites in the reference too, never in-place edits."""
-        parts = self.parts()
-        updated = self.read_raw().withColumns(
+        self._mutate_parts(lambda df: df.withColumns(
             {name: F.when(predicate, expr).otherwise(F.col(name))
-             for name, expr in assignments.items()})
-        new_part = self.insert(updated)
-        self._drop_parts([p for p in parts if p != new_part])
+             for name, expr in assignments.items()}))
 
     def apply_ttl(self, expired: Column) -> None:
         """TTL compaction: drop rows where ``expired`` holds."""
@@ -916,7 +1003,7 @@ class MergeTreeTable:
                         dst, f"{plain[0]}={value}"))
                 if not any(e.name.startswith(f"{plain[0]}=")
                            for e in os.scandir(part) if e.is_dir()):
-                    shutil.rmtree(part, ignore_errors=True)
+                    self._drop_parts([part])
             return
         # expression partition keys: split the slice out as a new
         # detached part, rewrite the remainder
@@ -1049,6 +1136,8 @@ class MergeTreeTable:
         import shutil
         for p in parts:
             shutil.rmtree(p, ignore_errors=True)
+            self._part_schemas.pop(p, None)
+            self._unmemoed.pop(p, None)
 
     # ------------------------------------------------ partition ops
 
@@ -1081,7 +1170,7 @@ class MergeTreeTable:
                 if not any(
                         e.name.startswith(f"{plain[0]}=")
                         for e in os.scandir(part) if e.is_dir()):
-                    shutil.rmtree(part, ignore_errors=True)
+                    self._drop_parts([part])
             return
         old = self.parts()
         if not old:

@@ -606,3 +606,195 @@ def test_column_defaults_on_insert(spark, tmp_path):
     assert t2.column_defaults == {"status": "'new'", "doubled": "k * 2"}
     t2.insert(spark.createDataFrame([(3, None)], "k int, status string"))
     assert {r.k: r.doubled for r in t2.read_raw().collect()}[3] == 6
+
+
+# ------------------------------------------------ pinned part schemas
+
+def _assert_pinned_is_inferred(spark, t):
+    """Every current part's pinned schema is what Spark infers for it,
+    and nothing is pinned for a part that is gone."""
+    parts = t.parts()
+    assert set(t._part_schemas) <= set(parts)
+    for p in parts:
+        sig, schema = t._part_schemas[p]
+        assert sig == t._part_sig(p)
+        assert schema == spark.read.parquet(p).schema
+
+
+_PIN_OPS = {
+    "insert": [],
+    "add_column": ["ALTER TABLE {t} ADD COLUMN c Int32 DEFAULT 7",
+                   "INSERT INTO {t} VALUES (5, 'e', 2, 9)"],
+    "lightweight_delete": ["DELETE FROM {t} WHERE k = 1"],
+    "heavy_delete": ["ALTER TABLE {t} DELETE WHERE k = 1"],
+    "drop_partition": ["ALTER TABLE {t} DROP PARTITION 2"],
+    "detach_attach": ["ALTER TABLE {t} DETACH PART '{part0}'",
+                      "ALTER TABLE {t} ATTACH PART '{part0}'"],
+    "truncate": ["TRUNCATE TABLE {t}"],
+    "optimize": ["OPTIMIZE TABLE {t} FINAL"],
+}
+
+
+@pytest.mark.parametrize("op", sorted(_PIN_OPS))
+def test_pinned_schema_equals_inference(spark, op):
+    import os
+    from clickhouse_core_spark.plans.frontend import ch_sql
+    tables, name = {}, f"pin_{op}"
+    part_by = " PARTITION BY p" if op == "drop_partition" else ""
+    ch_sql(spark, f"CREATE TABLE {name} (k UInt32, s String, p UInt8) "
+                  f"ENGINE = MergeTree ORDER BY k{part_by}", tables=tables)
+    ch_sql(spark, f"INSERT INTO {name} VALUES (1, 'a', 1), (2, 'b', 2)",
+           tables=tables)
+    ch_sql(spark, f"INSERT INTO {name} VALUES (3, 'c', 1)", tables=tables)
+    t = tables[name]
+    part0 = os.path.basename(t.parts()[0])
+    for stmt in _PIN_OPS[op]:
+        ch_sql(spark, stmt.format(t=name, part0=part0), tables=tables)
+    _assert_pinned_is_inferred(spark, t)
+    if op == "truncate":
+        assert t._part_schemas == {}
+    ch_sql(spark, f"DROP TABLE {name}", tables=tables)
+
+
+def test_write_schema_memo_is_exact(spark, tmp_path):
+    """A part written with an already-seen DataFrame schema gets its
+    schema from the memo, equal to a fresh inference for every column
+    type the goldens store (Nullable, LowCardinality, Decimal,
+    DateTime64 with its scale metadata, Array/Map/Tuple, the JSON
+    string carrier); hive-partitioned parts are never memoised."""
+    from decimal import Decimal
+    df = spark.createDataFrame(
+        [(1, None, "lc", Decimal("1.5"), "2020-01-01 00:00:00.123", [1],
+          {"a": 1},
+          (1, "x"), '{"a":1}')],
+        "k int, n int, lc string, dec decimal(18,4), ts string, "
+        "arr array<int>, m map<string,int>, tup struct<x:int,y:string>, "
+        "js string")
+    df = df.withColumn("ts", F.col("ts").cast("timestamp").alias(
+        "ts", metadata={"ch_dt64_scale": 3}))
+    t = MergeTreeTable(spark, str(tmp_path / "memo"), order_by=["k"])
+    t.insert(df)
+    t.read_raw()                      # infers part 1, memoises its schema
+    p2 = t.insert(df)
+    assert p2 in t._part_schemas      # pinned at write time, no job
+    assert t._part_schemas[p2][1] == spark.read.parquet(p2).schema
+    assert t._part_schemas[p2][1]["ts"].metadata == {"ch_dt64_scale": 3}
+    h = MergeTreeTable(spark, str(tmp_path / "hive"), order_by=["k"],
+                       partition_by=["n"])
+    h.insert(df.fillna(0, ["n"]))
+    h.read_raw()
+    assert h.insert(df.fillna(0, ["n"])) not in h._part_schemas
+
+
+def test_read_raw_of_seen_parts_launches_no_job(spark, tmp_path):
+    sc = spark.sparkContext
+    t = MergeTreeTable(spark, str(tmp_path / "nojob"), order_by=["k"])
+    for i in range(3):
+        t.insert(spark.createDataFrame([(i, "v")], "k int, v string"))
+    t.read_raw()
+    try:
+        sc.setJobGroup("mt_pinned", "read_raw of seen parts")
+        t.read_raw()
+        assert sc.statusTracker().getJobIdsForGroup("mt_pinned") == []
+        # the probe sees inference jobs when nothing is pinned
+        t._part_schemas.clear()
+        t.read_raw()
+        assert sc.statusTracker().getJobIdsForGroup("mt_pinned") != []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+# ------------------------------------------------ DROP / key-value tables
+
+def test_drop_table_removes_views_and_data(spark):
+    import os
+    from clickhouse_core_spark.plans.frontend import ch_sql
+    tables = {}
+    ch_sql(spark, "CREATE TABLE drop_rmt (k UInt32, v UInt32) ENGINE = "
+                  "ReplacingMergeTree(v) ORDER BY k", tables=tables)
+    ch_sql(spark, "INSERT INTO drop_rmt VALUES (1, 1), (1, 2)",
+           tables=tables)
+    path = tables["drop_rmt"].path
+    ch_sql(spark, "DROP TABLE drop_rmt", tables=tables)
+    with pytest.raises(Exception, match="drop_rmt"):
+        ch_sql(spark, "SELECT * FROM drop_rmt FINAL", tables=tables).collect()
+    assert not os.path.exists(path)
+
+
+def test_drop_replica_keeps_shared_storage(spark):
+    import os
+    from clickhouse_core_spark.plans.frontend import ch_sql
+    tables = {}
+    for r in ("1", "2"):
+        ch_sql(spark, f"CREATE TABLE drop_rep{r} (k UInt32) ENGINE = "
+                      f"ReplicatedMergeTree('/ch/drop_rep', '{r}') "
+                      f"ORDER BY k", tables=tables)
+    ch_sql(spark, "INSERT INTO drop_rep1 VALUES (1), (2)", tables=tables)
+    path = tables["drop_rep1"].path
+    ch_sql(spark, "DROP TABLE drop_rep1", tables=tables)
+    assert os.path.isdir(path)
+    assert ch_sql(spark, "SELECT count() AS n FROM drop_rep2",
+                  tables=tables).first()["n"] == 2
+    ch_sql(spark, "DROP TABLE drop_rep2", tables=tables)
+    assert not os.path.exists(path)
+
+
+def test_drop_keeps_storage_reused_after_rename(spark):
+    """RENAME keeps the storage directory; a new table under the old
+    name reuses that path, and dropping the renamed table leaves it."""
+    from clickhouse_core_spark.plans.frontend import ch_sql
+    tables = {}
+    q = lambda s: ch_sql(spark, s, tables=tables)  # noqa: E731
+    q("CREATE TABLE drop_ren (k UInt32) ENGINE = MergeTree ORDER BY k")
+    q("INSERT INTO drop_ren VALUES (7)")
+    q("RENAME TABLE drop_ren TO drop_ren2")
+    q("CREATE TABLE drop_ren (k UInt32) ENGINE = MergeTree ORDER BY k")
+    q("INSERT INTO drop_ren VALUES (1)")
+    q("DROP TABLE drop_ren2")
+    assert q("SELECT count() AS n FROM drop_ren").first()["n"] == 1
+    q("DROP TABLE drop_ren")
+
+
+def test_rocksdb_keeps_latest_value_across_mutations(spark):
+    """EmbeddedRocksDB upserts: a mutation rewrites part by part in
+    part order, so the latest value of a key still wins — through the
+    view after the DELETE and after the following merge."""
+    from clickhouse_core_spark.plans.frontend import ch_sql
+    tables = {}
+    q = lambda s: ch_sql(spark, s, tables=tables)  # noqa: E731
+    q("CREATE TABLE kv_mut (k UInt32, v String) ENGINE = EmbeddedRocksDB "
+      "PRIMARY KEY k")
+    q("INSERT INTO kv_mut VALUES (1, 'a'), (2, 'b')")
+    q("INSERT INTO kv_mut VALUES (1, 'c')")
+    q("ALTER TABLE kv_mut DELETE WHERE k = 2")
+    rows = lambda: sorted(tuple(r) for r in  # noqa: E731
+                          q("SELECT k, v FROM kv_mut").collect())
+    assert rows() == [(1, "c")]
+    q("OPTIMIZE TABLE kv_mut")
+    assert rows() == [(1, "c")]
+    q("DROP TABLE kv_mut")
+
+
+def test_mutation_emptying_a_hive_part_drops_it(spark, tmp_path):
+    """A per-part DELETE that removes every row of a hive-partitioned
+    part leaves no part behind (an empty partitioned write has no file
+    to read a schema from)."""
+    t = MergeTreeTable(spark, str(tmp_path / "hive_del"), order_by=["k"],
+                       partition_by=["p"])
+    t.insert(spark.createDataFrame([(1, 1)], "k int, p int"))
+    t.insert(spark.createDataFrame([(2, 2)], "k int, p int"))
+    t.delete_where(F.col("p") == 2)
+    assert len(t.parts()) == 1
+    assert _rows(t.read_raw(), "k", "p") == [(1, 1)]
+
+
+def test_join_engine_insert_refreshes_its_view(spark):
+    from clickhouse_core_spark.plans.frontend import ch_sql
+    tables = {}
+    ch_sql(spark, "CREATE TABLE jeng (k UInt32, v String) "
+                  "ENGINE = Join(ANY, LEFT, k)", tables=tables)
+    ch_sql(spark, "INSERT INTO jeng VALUES (1, 'a')", tables=tables)
+    assert [tuple(r) for r in ch_sql(spark, "SELECT k, v FROM jeng",
+                                     tables=tables).collect()] == [(1, "a")]
+    ch_sql(spark, "DROP TABLE jeng", tables=tables)
