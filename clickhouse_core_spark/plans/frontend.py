@@ -3558,42 +3558,6 @@ _INLINE_ALIAS_KW = {
 }
 
 
-_GROUPBY_SPAN_RE = re.compile(
-    r"\bGROUP\s+BY\s+(.*?)(?=\s+(WITH\s+(CUBE|ROLLUP|TOTALS)|HAVING|"
-    r"QUALIFY|ORDER\s+BY|LIMIT|SETTINGS|UNION|INTERSECT|EXCEPT)\b|$)",
-    re.IGNORECASE | re.DOTALL)
-
-
-def _rewrite_groupby_item_aliases(sql: str) -> str:
-    """CH allows ``GROUP BY expr AS name`` with ``name`` selectable
-    (QueryNormalizer — same alias model as inline expression aliases):
-    wrap such items in parens so the inline-alias rewrite hoists them
-    into the defining subquery."""
-    m = next((mm for mm in _GROUPBY_SPAN_RE.finditer(sql)
-              if mm.start() in _top_level_set(sql)), None)
-    if m is None or re.search(r"(?i)\bGROUPING\s+SETS\b", m.group(1)):
-        return sql
-    items = _split_top_commas(m.group(1))
-    changed = False
-    out_items = []
-    for it in items:
-        it = it.strip()
-        am = re.fullmatch(r"(?is)(.*\S)\s+AS\s+(`?\w+`?)", it)
-        whole_group = re.fullmatch(r"(?is)\((.*)\)", it)
-        already = bool(
-            whole_group and re.fullmatch(
-                r"(?is)(.*\S)\s+AS\s+(`?\w+`?)", whole_group.group(1)))
-        if am and not already:
-            out_items.append(f"({am.group(1)} AS {am.group(2)})")
-            changed = True
-        else:
-            out_items.append(it)
-    if not changed:
-        return sql
-    return (sql[:m.start()] + "GROUP BY " + ", ".join(out_items)
-            + sql[m.end():])
-
-
 _GBY_AGG_RE = re.compile(
     r"(?i)\b(count|sum|min|max|avg|any|uniq\w*|group\w+|median|"
     r"quantile\w*|argMin|argMax|corr|stddev\w*|var\w*|topK\w*)\s*\(")
@@ -8020,7 +7984,6 @@ def translate_ch_sql(sql: str, sample_by: dict[str, str] | None = None) -> str:
                        else "double('NaN')"), seg))
     sql = _rewrite_double_quoted_idents(sql)
     sql = _rewrite_distinct_on(sql)
-    sql = _rewrite_groupby_item_aliases(sql)
     sql = _rewrite_groupby_alias_shadow(sql)
     sql = _fold_totypename_static(sql)
     if re.search(r"(?i)::\s*Object\s*\(", sql):
@@ -11351,33 +11314,6 @@ def _retry_bool_arith(translated: str, err: Exception):
     return out if out != translated else None
 
 
-def _expr_right_boundary(sql: str, pos: int) -> int:
-    """End index of the expression starting at ``pos``: walk right to
-    a same-depth comma/close-paren/clause keyword (incl. AND/OR)."""
-    i, n, depth = pos, len(sql), 0
-    while i < n:
-        c = sql[i]
-        if c in "'\"":
-            i = _skip_string(sql, i)
-            continue
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            if depth == 0:
-                return i
-            depth -= 1
-        elif c == "," and depth == 0:
-            return i
-        elif (c.isalpha() or c == "_") and depth == 0:
-            m = _IDENT.match(sql, i)
-            if m and m.group(0).lower() in _TERNARY_STOP_KW:
-                return i
-            i = m.end() if m else i + 1
-            continue
-        i += 1
-    return n
-
-
 def _retry_not_numeric(translated: str, err: Exception):
     """CH ``NOT x`` takes numbers (nonzero = true —
     FunctionsLogical.cpp), e.g. ``WHERE NOT ignore(c)``; Spark's NOT
@@ -12790,10 +12726,26 @@ def _utility_statement(spark, text: str, tables):
         df = _resolve_view(spark, old, tables)
         if df is None:
             raise ValueError(f"RENAME: unknown table {old!r}")
-        if tables is not None and old in tables:
-            tables[new] = tables.pop(old)
-        df.createOrReplaceTempView(new)
+        t = tables.pop(old, None) if tables is not None else None
         spark.catalog.dropTempView(old)
+        spark.catalog.dropTempView(f"{old}__final")
+        df.createOrReplaceTempView(new)
+        if t is not None:
+            tables[new] = t
+        if not hasattr(t, "read_views"):
+            return None
+        # a MergeTree table's storage moves with the name, so a later
+        # CREATE TABLE under the old name starts on a directory of its own
+        import os as _os
+        src = _os.path.join(_default_table_dir(), old)
+        dst = _os.path.join(_default_table_dir(), new)
+        if getattr(t, "path", None) == src and all(
+                getattr(v, "path", None) != dst for v in tables.values()):
+            import shutil as _shutil
+            _shutil.rmtree(dst, ignore_errors=True)
+            _shutil.move(src, dst)
+            t.path = dst
+        _register_table_views(spark, new, t, tables)
         return None
 
     m = re.match(r"^EXCHANGE\s+TABLES\s+`?(\w+)`?\s+AND\s+`?(\w+)`?\s*$",

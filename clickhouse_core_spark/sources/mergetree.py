@@ -162,17 +162,6 @@ class MergeTreeTable:
         # NULLs from the expression (which may reference other
         # inserted columns, the materialized-default contract)
         self.column_defaults = dict(column_defaults or {})
-        # pinned part schemas: part path -> (top-level entries, Spark
-        # schema).  A part is immutable, so its Parquet schema is
-        # inferred once (one Spark job per part) and reused while the
-        # part's entries stay the same; dropping, detaching or
-        # attaching a hive slice changes the entries and re-infers.
-        self._part_schemas: dict[str, tuple[tuple, StructType]] = {}
-        # write-schema memo (unpartitioned parts only): the DataFrame
-        # schema a part was written with -> the schema Spark infers for
-        # such a part; parts not yet inferred wait in _unmemoed
-        self._write_schemas: dict[str, StructType] = {}
-        self._unmemoed: dict[str, str] = {}
         os.makedirs(path, exist_ok=True)
         self._write_meta()
 
@@ -277,22 +266,17 @@ class MergeTreeTable:
         if plain_parts:
             w = w.partitionBy(*plain_parts)
         w.parquet(part_dir)
-        if plain_parts:
-            if not self._part_sig(part_dir):
-                # an empty partitioned write leaves no file to read a
-                # schema from: the part holds nothing, so it is no part
-                self._drop_parts([part_dir])
-                return part_dir
-        else:
-            # hive partition column types come from directory values,
-            # so only unpartitioned parts share a write-schema memo
-            wkey = df.schema.json()
-            known = self._write_schemas.get(wkey)
-            if known is None:
-                self._unmemoed[part_dir] = wkey
-            else:
-                self._part_schemas[part_dir] = (self._part_sig(part_dir),
-                                                known)
+        if plain_parts and all(e.startswith(("_", "."))
+                               for e in os.listdir(part_dir)):
+            # an empty partitioned write leaves no data slice: the part
+            # holds nothing, so it is no part
+            self._drop_parts([part_dir])
+            return part_dir
+        # the part's column list (the reference's per-part columns.txt):
+        # every read of the part uses it, so none infers from Parquet
+        # and hive partition columns keep their written types
+        with open(self._schema_path(part_dir), "w") as fh:
+            fh.write(df.schema.json())
         if self.token_index_cols:
             self._write_token_index(part_dir)
         if self.gin_index_cols:
@@ -317,7 +301,7 @@ class MergeTreeTable:
         per indexed column, bloom-filtered on token.  One extra pass over
         the fresh part — the same write-time cost profile as the
         reference's index granule build."""
-        df = (self.spark.read.parquet(part_dir)
+        df = (self._read_part(part_dir)
               .withColumn("__file", F.col("_metadata.file_path")))
         for col in self.token_index_cols:
             idx = (df.select(F.explode(self._tokenize(F.col(col)))
@@ -354,8 +338,8 @@ class MergeTreeTable:
         if not files:
             return self.read_raw().filter(F.lit(False))
         pat = r"(?i)(^|[^\p{L}\p{N}])" + token + r"($|[^\p{L}\p{N}])"
-        df = (self.spark.read.parquet(*files)
-              .filter(F.col(col).rlike(pat)))
+        df = (self.spark.read.schema(self._file_schema(files[0]))
+              .parquet(*files).filter(F.col(col).rlike(pat)))
         # honor lightweight deletes (read_raw's implicit _row_exists = 1
         # contract) on the pruned scan too
         return self._apply_delete_masks(df, self.parts())
@@ -400,7 +384,7 @@ class MergeTreeTable:
         bounds = self._rowgroup_bounds(part_dir)
         bdf = self.spark.createDataFrame(
             bounds, "file string, rg int, row_start long, row_end long")
-        base = (self.spark.read.parquet(part_dir)
+        base = (self._read_part(part_dir)
                 .select(F.col("_metadata.file_path").alias("file"),
                         F.col("_metadata.row_index").alias("row_index"),
                         *self.gin_index_cols))
@@ -504,7 +488,7 @@ class MergeTreeTable:
         delete-mask anti-join needs — computed executor-side from the
         footer's row-group row offsets."""
         from pyspark.sql.pandas.types import to_arrow_schema
-        schema = self.spark.read.parquet(file_rgs[0][0]).schema
+        schema = self._file_schema(file_rgs[0][0])
         out_schema = schema
         if with_lineage:
             # copy the field list — StructType(schema.fields) would alias
@@ -555,31 +539,29 @@ class MergeTreeTable:
     # ----------------------------------------------------------------- reads
 
     @staticmethod
-    def _part_sig(part: str) -> tuple:
-        """A part's identity for the pinned schema: its top-level data
-        entries (data files, or ``col=value`` hive slices).  Names that
-        start with ``_`` or ``.`` (``_SUCCESS``, CRCs, delete masks,
-        index sidecars) are invisible to Spark's reader, so they are
-        left out too."""
-        return tuple(sorted(e for e in os.listdir(part)
-                            if not e.startswith(("_", "."))))
+    def _schema_path(part: str) -> str:
+        return os.path.join(part, "_schema.json")
 
     def _read_part(self, part: str) -> DataFrame:
-        """One part as a DataFrame.  Per-part ``basePath`` keeps hive
-        partition discovery local to the part; the schema is inferred
-        (one Spark job) only the first time a part is read with these
-        entries, then passed in."""
-        reader = self.spark.read.option("basePath", part)
-        sig = self._part_sig(part)
-        pinned = self._part_schemas.get(part)
-        if pinned is not None and pinned[0] == sig:
-            return reader.schema(pinned[1]).parquet(part)
-        df = reader.parquet(part)
-        self._part_schemas[part] = (sig, df.schema)
-        wkey = self._unmemoed.pop(part, None)
-        if wkey is not None:
-            self._write_schemas.setdefault(wkey, df.schema)
-        return df
+        """One part as a DataFrame, read with the schema the part was
+        written with (its ``_schema.json``).  Per-part ``basePath``
+        keeps hive partition discovery local to the part."""
+        with open(self._schema_path(part)) as fh:
+            schema = StructType.fromJson(json.load(fh))
+        return (self.spark.read.option("basePath", part).schema(schema)
+                .parquet(part))
+
+    def _file_schema(self, file_uri: str) -> StructType:
+        """The schema of one data file of a part: its part's schema
+        without the hive partition columns, which a file read does not
+        discover."""
+        path = file_uri
+        if path.startswith("file:"):
+            path = "/" + path.split(":", 1)[1].lstrip("/")
+        root = os.path.abspath(self.path)
+        part = os.path.join(root, os.path.relpath(path, root).split(os.sep)[0])
+        return StructType([f for f in self._read_part(part).schema.fields
+                           if f.name not in self.partition_by])
 
     def read_raw(self, with_seq: bool = False,
                  parts: Sequence[str] | None = None) -> DataFrame:
@@ -842,7 +824,7 @@ class MergeTreeTable:
         (append mode) across successive lightweight deletes."""
         cond = F.coalesce(predicate, F.lit(False))
         for part in self.parts():
-            hits = (self.spark.read.parquet(part)
+            hits = (self._read_part(part)
                     .withColumn("__file", F.col("_metadata.file_path"))
                     .withColumn("__row", F.col("_metadata.row_index"))
                     .filter(cond)
@@ -999,6 +981,7 @@ class MergeTreeTable:
                 if os.path.isdir(d):
                     dst = os.path.join(det, os.path.basename(part))
                     os.makedirs(dst, exist_ok=True)
+                    shutil.copy(self._schema_path(part), dst)
                     shutil.move(d, os.path.join(
                         dst, f"{plain[0]}={value}"))
                 if not any(e.name.startswith(f"{plain[0]}=")
@@ -1036,6 +1019,7 @@ class MergeTreeTable:
                     continue
                 dst = os.path.join(self.path, e.name)
                 os.makedirs(dst, exist_ok=True)
+                shutil.copy(self._schema_path(e.path), dst)
                 shutil.move(d, os.path.join(
                     dst, f"{plain[0]}={value}"))
                 if not any(x.is_dir() for x in os.scandir(e.path)):
@@ -1045,8 +1029,7 @@ class MergeTreeTable:
                 # requested partition — a detached part may hold other
                 # partitions' slices (or have come from DETACH PART),
                 # and those must stay detached
-                df = self.spark.read.option("basePath", e.path) \
-                    .parquet(e.path)
+                df = self._read_part(e.path)
                 pred = F.coalesce(self.partition_predicate(value),
                                   F.lit(False))
                 match = df.filter(pred).localCheckpoint(eager=True)
@@ -1136,8 +1119,6 @@ class MergeTreeTable:
         import shutil
         for p in parts:
             shutil.rmtree(p, ignore_errors=True)
-            self._part_schemas.pop(p, None)
-            self._unmemoed.pop(p, None)
 
     # ------------------------------------------------ partition ops
 

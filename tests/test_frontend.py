@@ -1,6 +1,8 @@
 """ClickHouse-SQL dialect frontend: translated queries must run on
 Spark and match the same semantics computed natively."""
 
+from decimal import Decimal
+
 import pytest
 
 from clickhouse_core_spark.plans import ch_sql, translate_ch_sql
@@ -914,3 +916,85 @@ def test_small_form_rewrites(spark):
     dq = ch_sql(spark, 'SELECT a AS "my col" FROM small_t ORDER BY a '
                 "LIMIT 1")
     assert dq.columns == ["my col"]
+
+
+def test_ternary_with_array_literal(spark):
+    """A ternary branch that is an array literal: the else-branch
+    boundary scan skips brackets like parens."""
+    from clickhouse_core_spark.plans.frontend import ch_sql
+    rows = ch_sql(spark, "SELECT number, number % 2 = 0 ? [number, 1] : "
+                         "[2, 3] AS x FROM numbers(3) ORDER BY number")
+    assert [r["x"] for r in rows.collect()] == [[0, 1], [2, 3], [2, 1]]
+
+
+@pytest.fixture(scope="module")
+def pin_tables(spark):
+    from clickhouse_core_spark.plans.frontend import ch_sql
+    tables = {}
+    ch_sql(spark, "CREATE TABLE pass_pin (k UInt32, c Nested(d UInt32)) "
+                  "ENGINE = MergeTree ORDER BY k", tables=tables)
+    ch_sql(spark, "INSERT INTO pass_pin VALUES (1, [10, 20, 30])",
+           tables=tables)
+    yield tables
+    ch_sql(spark, "DROP TABLE pass_pin", tables=tables)
+
+
+def _pass_pin_part(rows, tables):
+    import os
+    part = os.path.basename(tables["pass_pin"].parts()[0])
+    return [tuple(r) for r in rows] == [(part, 1)]
+
+
+# Rewrite passes that only a crafted statement reaches: each statement
+# must go through its pass (the pass changes its input) and return the
+# reference's answer.
+_PASS_PINS = [
+    ("_fold_totypename_static",
+     "SELECT toTypeName(CAST('abc' AS FixedString(3)))",
+     [("FixedString(3)",)]),
+    ("_rewrite_object_literal_casts",
+     """SELECT '{"a":{"b":1,"c":2}}'::Object('json')""",
+     [('{"a.b":1,"a.c":2}',)]),
+    ("_rewrite_decimal_div", "SELECT toDecimal32(2, 2) / 3",
+     [(Decimal("0.66"),)]),
+    ("_fix_like_patterns", r"SELECT 'a\\.b' LIKE 'a\\.b'", [(True,)]),
+    ("_rewrite_star_in_args", "SELECT tuple(*, 1) FROM numbers(2)",
+     [((0, 1),), ((1, 1),)]),
+    ("_fold_const_int", "SELECT count() FROM numbers(toUInt8(300))",
+     [(44,)]),
+    ("_rewrite_virtual_columns", "SELECT _part, k FROM pass_pin",
+     _pass_pin_part),
+    ("_retry_bool_agg_arg", "SELECT sum(number = 1) FROM numbers(3)",
+     [(1,)]),
+    ("_retry_not_numeric",
+     "SELECT count() FROM numbers(3) WHERE NOT ignore(number)", [(3,)]),
+    ("_retry_missing_aggregation",
+     "SELECT sum((2*number) AS func), func FROM numbers(4) "
+     "GROUP BY number", [(0, 0), (2, 2), (4, 4), (6, 6)]),
+    ("_retry_octet_length_array", "SELECT length(c.d) FROM pass_pin",
+     [(3,)]),
+]
+
+
+@pytest.mark.parametrize("pass_name,stmt,expected", _PASS_PINS,
+                         ids=[p[0] for p in _PASS_PINS])
+def test_rewrite_pass_pins(spark, pin_tables, monkeypatch, pass_name,
+                           stmt, expected):
+    from clickhouse_core_spark.plans import frontend
+    from clickhouse_core_spark.plans.frontend import ch_sql
+    orig, fired = getattr(frontend, pass_name), []
+
+    def spy(*args):
+        out = orig(*args)
+        src = next(a for a in args if isinstance(a, str))
+        if out is not None and str(out).strip() != src.strip():
+            fired.append(out)
+        return out
+
+    monkeypatch.setattr(frontend, pass_name, spy)
+    rows = ch_sql(spark, stmt, tables=pin_tables).collect()
+    assert fired
+    if callable(expected):
+        assert expected(rows, pin_tables)
+    else:
+        assert sorted(tuple(r) for r in rows) == expected

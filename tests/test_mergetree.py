@@ -608,17 +608,26 @@ def test_column_defaults_on_insert(spark, tmp_path):
     assert {r.k: r.doubled for r in t2.read_raw().collect()}[3] == 6
 
 
-# ------------------------------------------------ pinned part schemas
+# ------------------------------------------------ part schemas
 
-def _assert_pinned_is_inferred(spark, t):
-    """Every current part's pinned schema is what Spark infers for it,
-    and nothing is pinned for a part that is gone."""
-    parts = t.parts()
-    assert set(t._part_schemas) <= set(parts)
-    for p in parts:
-        sig, schema = t._part_schemas[p]
-        assert sig == t._part_sig(p)
-        assert schema == spark.read.parquet(p).schema
+def _assert_part_schemas_are_inferred(spark, t):
+    """Every current part carries its ``_schema.json`` (the schema the
+    part is pinned to from its write on), and reads with
+    the schema Spark infers for it — all columns of an unpartitioned
+    part, the data columns of a hive part (whose partition columns
+    keep their written types instead of the ones directory names
+    suggest)."""
+    import os
+    for p in t.parts():
+        assert os.path.isfile(os.path.join(p, "_schema.json"))
+        got = t._read_part(p).schema
+        inferred = spark.read.parquet(p).schema
+        if not t.partition_by:
+            assert got == inferred
+        else:
+            data = [f for f in got.fields if f.name not in t.partition_by]
+            assert data == [f for f in inferred.fields
+                            if f.name not in t.partition_by]
 
 
 _PIN_OPS = {
@@ -630,6 +639,8 @@ _PIN_OPS = {
     "drop_partition": ["ALTER TABLE {t} DROP PARTITION 2"],
     "detach_attach": ["ALTER TABLE {t} DETACH PART '{part0}'",
                       "ALTER TABLE {t} ATTACH PART '{part0}'"],
+    "detach_attach_partition": ["ALTER TABLE {t} DETACH PARTITION 1",
+                                "ALTER TABLE {t} ATTACH PARTITION 1"],
     "truncate": ["TRUNCATE TABLE {t}"],
     "optimize": ["OPTIMIZE TABLE {t} FINAL"],
 }
@@ -640,7 +651,7 @@ def test_pinned_schema_equals_inference(spark, op):
     import os
     from clickhouse_core_spark.plans.frontend import ch_sql
     tables, name = {}, f"pin_{op}"
-    part_by = " PARTITION BY p" if op == "drop_partition" else ""
+    part_by = " PARTITION BY p" if "partition" in op else ""
     ch_sql(spark, f"CREATE TABLE {name} (k UInt32, s String, p UInt8) "
                   f"ENGINE = MergeTree ORDER BY k{part_by}", tables=tables)
     ch_sql(spark, f"INSERT INTO {name} VALUES (1, 'a', 1), (2, 'b', 2)",
@@ -648,61 +659,96 @@ def test_pinned_schema_equals_inference(spark, op):
     ch_sql(spark, f"INSERT INTO {name} VALUES (3, 'c', 1)", tables=tables)
     t = tables[name]
     part0 = os.path.basename(t.parts()[0])
+    before = sorted(tuple(r) for r in ch_sql(
+        spark, f"SELECT k, s, p FROM {name}", tables=tables).collect())
     for stmt in _PIN_OPS[op]:
         ch_sql(spark, stmt.format(t=name, part0=part0), tables=tables)
-    _assert_pinned_is_inferred(spark, t)
+    _assert_part_schemas_are_inferred(spark, t)
     if op == "truncate":
-        assert t._part_schemas == {}
+        assert t.parts() == []
+    if op.startswith("detach_attach"):
+        assert sorted(tuple(r) for r in ch_sql(
+            spark, f"SELECT k, s, p FROM {name}",
+            tables=tables).collect()) == before
     ch_sql(spark, f"DROP TABLE {name}", tables=tables)
 
 
-def test_write_schema_memo_is_exact(spark, tmp_path):
-    """A part written with an already-seen DataFrame schema gets its
-    schema from the memo, equal to a fresh inference for every column
-    type the goldens store (Nullable, LowCardinality, Decimal,
-    DateTime64 with its scale metadata, Array/Map/Tuple, the JSON
-    string carrier); hive-partitioned parts are never memoised."""
+def test_part_schema_type_matrix(spark, tmp_path):
+    """A part reads with the schema it was written with, equal to a
+    fresh inference for every column type the goldens store
+    (Nullable, LowCardinality, small ints, Decimal, DateTime64 with
+    its scale metadata, timestamp_ntz, date, binary, Array/Map/Tuple
+    also with non-nullable elements, the JSON string carrier)."""
     from decimal import Decimal
+    from pyspark.sql import types as T
     df = spark.createDataFrame(
-        [(1, None, "lc", Decimal("1.5"), "2020-01-01 00:00:00.123", [1],
-          {"a": 1},
-          (1, "x"), '{"a":1}')],
-        "k int, n int, lc string, dec decimal(18,4), ts string, "
-        "arr array<int>, m map<string,int>, tup struct<x:int,y:string>, "
-        "js string")
-    df = df.withColumn("ts", F.col("ts").cast("timestamp").alias(
-        "ts", metadata={"ch_dt64_scale": 3}))
-    t = MergeTreeTable(spark, str(tmp_path / "memo"), order_by=["k"])
-    t.insert(df)
-    t.read_raw()                      # infers part 1, memoises its schema
-    p2 = t.insert(df)
-    assert p2 in t._part_schemas      # pinned at write time, no job
-    assert t._part_schemas[p2][1] == spark.read.parquet(p2).schema
-    assert t._part_schemas[p2][1]["ts"].metadata == {"ch_dt64_scale": 3}
+        [(1, None, "lc", 3, 4, Decimal("1.5"), Decimal(7),
+          "2020-01-01 00:00:00.123", [1], {"a": 1}, (1, "x"), '{"a":1}',
+          bytearray(b"b"))],
+        "k int, n int, lc string, ti tinyint, si smallint, "
+        "dec decimal(18,4), d20 decimal(20,0), ts string, arr array<int>, "
+        "m map<string,int>, tup struct<x:int,y:string>, js string, "
+        "bin binary")
+    df = df.select(
+        "*", F.to_date("ts").alias("d"),
+        F.col("ts").cast("timestamp_ntz").alias("ntz"),
+        F.array(F.lit(1)).alias("arr_nn"),
+        F.create_map(F.lit("a"), F.lit(1)).alias("map_nn"),
+        F.struct(F.lit(1).alias("x")).alias("tup_nn")).withColumn(
+        "ts", F.col("ts").cast("timestamp").alias(
+            "ts", metadata={"ch_dt64_scale": 3}))
+    assert not df.schema["arr_nn"].dataType.containsNull
+    t = MergeTreeTable(spark, str(tmp_path / "types"), order_by=["k"])
+    for _ in range(2):
+        t.insert(df)
+    _assert_part_schemas_are_inferred(spark, t)
+    assert t.read_raw().schema["ts"].metadata == {"ch_dt64_scale": 3}
+    assert t.read_raw().collect() == spark.read.parquet(
+        *t.parts()).collect()
     h = MergeTreeTable(spark, str(tmp_path / "hive"), order_by=["k"],
                        partition_by=["n"])
-    h.insert(df.fillna(0, ["n"]))
-    h.read_raw()
-    assert h.insert(df.fillna(0, ["n"])) not in h._part_schemas
+    h.insert(df.fillna(0, ["n"]).withColumn("n", F.col("n").cast("short")))
+    _assert_part_schemas_are_inferred(spark, h)
+    assert h.read_raw().schema["n"].dataType == T.ShortType()
 
 
-def test_read_raw_of_seen_parts_launches_no_job(spark, tmp_path):
+def test_hive_string_partition_keeps_its_values(spark):
+    """A String partition key whose values look like numbers reads
+    back as the strings that were inserted: inferring the type from
+    directory names made '01' and '1' the same int."""
+    from pyspark.sql import types as T
+    from clickhouse_core_spark.plans.frontend import ch_sql
+    tables = {}
+    q = lambda s: ch_sql(spark, s, tables=tables)  # noqa: E731
+    q("CREATE TABLE hive_str (k UInt32, s String) ENGINE = MergeTree "
+      "PARTITION BY s ORDER BY k")
+    q("INSERT INTO hive_str VALUES (1, '01'), (2, '1'), (3, '007')")
+    df = q("SELECT k, s FROM hive_str")
+    assert df.schema["s"].dataType == T.StringType()
+    assert sorted(tuple(r) for r in df.collect()) == [
+        (1, "01"), (2, "1"), (3, "007")]
+    assert q("SELECT count() AS n FROM (SELECT s FROM hive_str "
+             "GROUP BY s)").first()["n"] == 3
+    q("DROP TABLE hive_str")
+
+
+def test_read_raw_of_a_loaded_table_launches_no_job(spark, tmp_path):
     sc = spark.sparkContext
-    t = MergeTreeTable(spark, str(tmp_path / "nojob"), order_by=["k"])
+    path = str(tmp_path / "nojob")
+    t = MergeTreeTable(spark, path, order_by=["k"])
     for i in range(3):
         t.insert(spark.createDataFrame([(i, "v")], "k int, v string"))
-    t.read_raw()
     try:
-        sc.setJobGroup("mt_pinned", "read_raw of seen parts")
-        t.read_raw()
-        assert sc.statusTracker().getJobIdsForGroup("mt_pinned") == []
-        # the probe sees inference jobs when nothing is pinned
-        t._part_schemas.clear()
-        t.read_raw()
-        assert sc.statusTracker().getJobIdsForGroup("mt_pinned") != []
+        sc.setJobGroup("mt_schema", "read_raw of a loaded table")
+        df = MergeTreeTable.load(spark, path).read_raw()
+        assert sc.statusTracker().getJobIdsForGroup("mt_schema") == []
+        # the probe sees the job of a Parquet schema inference
+        spark.read.parquet(t.parts()[0])
+        assert sc.statusTracker().getJobIdsForGroup("mt_schema") != []
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
+    assert _rows(df, "k", "v") == [(0, "v"), (1, "v"), (2, "v")]
 
 
 # ------------------------------------------------ DROP / key-value tables
@@ -741,8 +787,9 @@ def test_drop_replica_keeps_shared_storage(spark):
 
 
 def test_drop_keeps_storage_reused_after_rename(spark):
-    """RENAME keeps the storage directory; a new table under the old
-    name reuses that path, and dropping the renamed table leaves it."""
+    """RENAME moves the storage directory to the new name; a new table
+    under the old name gets a directory of its own, so the renamed
+    table keeps its row, and dropping it leaves the new table's."""
     from clickhouse_core_spark.plans.frontend import ch_sql
     tables = {}
     q = lambda s: ch_sql(spark, s, tables=tables)  # noqa: E731
@@ -751,9 +798,39 @@ def test_drop_keeps_storage_reused_after_rename(spark):
     q("RENAME TABLE drop_ren TO drop_ren2")
     q("CREATE TABLE drop_ren (k UInt32) ENGINE = MergeTree ORDER BY k")
     q("INSERT INTO drop_ren VALUES (1)")
+    assert [tuple(r) for r in q("SELECT k FROM drop_ren2").collect()] \
+        == [(7,)]
     q("DROP TABLE drop_ren2")
     assert q("SELECT count() AS n FROM drop_ren").first()["n"] == 1
     q("DROP TABLE drop_ren")
+
+
+def test_rename_moves_the_table(spark):
+    """RENAME TABLE moves the name, its FINAL view and its storage:
+    the old name is gone, and re-creating it leaves the renamed
+    table's rows alone."""
+    import os
+    from clickhouse_core_spark.plans.frontend import ch_sql
+    tables = {}
+    q = lambda s: ch_sql(spark, s, tables=tables)  # noqa: E731
+    rows = lambda s: sorted(tuple(r) for r in q(s).collect())  # noqa: E731
+    q("CREATE TABLE rn (k UInt32, v UInt32) ENGINE = ReplacingMergeTree(v) "
+      "ORDER BY k")
+    q("INSERT INTO rn VALUES (1, 1), (1, 2), (2, 5)")
+    q("RENAME TABLE rn TO rn2")
+    assert rows("SELECT k, v FROM rn2 FINAL") == [(1, 2), (2, 5)]
+    for stmt in ("SELECT k FROM rn", "SELECT k FROM rn FINAL"):
+        with pytest.raises(Exception, match="rn"):
+            q(stmt).collect()
+    q("CREATE TABLE rn (k UInt32, v UInt32) ENGINE = ReplacingMergeTree(v) "
+      "ORDER BY k")
+    q("INSERT INTO rn VALUES (9, 9)")
+    q("INSERT INTO rn2 VALUES (3, 1)")
+    assert rows("SELECT k, v FROM rn2") == [(1, 1), (1, 2), (2, 5), (3, 1)]
+    assert rows("SELECT k, v FROM rn") == [(9, 9)]
+    assert os.path.basename(tables["rn2"].path) == "rn2"
+    q("DROP TABLE rn")
+    q("DROP TABLE rn2")
 
 
 def test_rocksdb_keeps_latest_value_across_mutations(spark):
@@ -785,6 +862,8 @@ def test_mutation_emptying_a_hive_part_drops_it(spark, tmp_path):
     t.insert(spark.createDataFrame([(1, 1)], "k int, p int"))
     t.insert(spark.createDataFrame([(2, 2)], "k int, p int"))
     t.delete_where(F.col("p") == 2)
+    assert len(t.parts()) == 1
+    t.insert(spark.createDataFrame([], "k int, p int"))
     assert len(t.parts()) == 1
     assert _rows(t.read_raw(), "k", "p") == [(1, 1)]
 
