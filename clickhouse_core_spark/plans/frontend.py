@@ -12723,29 +12723,23 @@ def _utility_statement(spark, text: str, tables):
                  text, re.IGNORECASE)
     if m:
         old, new = m.group(1), m.group(2)
-        df = _resolve_view(spark, old, tables)
-        if df is None:
-            raise ValueError(f"RENAME: unknown table {old!r}")
-        t = tables.pop(old, None) if tables is not None else None
+        t = (tables or {}).get(old)
+        df = None
+        if not hasattr(t, "read_views"):
+            df = _resolve_view(spark, old, tables)
+            if df is None:
+                raise ValueError(f"RENAME: unknown table {old!r}")
+        if tables is not None and old in tables:
+            tables[new] = tables.pop(old)
         spark.catalog.dropTempView(old)
         spark.catalog.dropTempView(f"{old}__final")
-        df.createOrReplaceTempView(new)
-        if t is not None:
-            tables[new] = t
-        if not hasattr(t, "read_views"):
-            return None
-        # a MergeTree table's storage moves with the name, so a later
-        # CREATE TABLE under the old name starts on a directory of its own
-        import os as _os
-        src = _os.path.join(_default_table_dir(), old)
-        dst = _os.path.join(_default_table_dir(), new)
-        if getattr(t, "path", None) == src and all(
-                getattr(v, "path", None) != dst for v in tables.values()):
-            import shutil as _shutil
-            _shutil.rmtree(dst, ignore_errors=True)
-            _shutil.move(src, dst)
-            t.path = dst
-        _register_table_views(spark, new, t, tables)
+        if df is None:
+            # a MergeTree table keeps its storage directory (the
+            # reference's Atomic database keeps data under a per-table
+            # UUID); CREATE TABLE <old> then picks a directory of its own
+            _register_table_views(spark, new, t, tables)
+        else:
+            df.createOrReplaceTempView(new)
         return None
 
     m = re.match(r"^EXCHANGE\s+TABLES\s+`?(\w+)`?\s+AND\s+`?(\w+)`?\s*$",
@@ -13077,7 +13071,7 @@ def _storage_clause_exprs(tail: str, kw: str) -> list[str] | None:
             if c.strip()]
 
 
-def create_table_sql(spark, sql: str, base_dir: str):
+def create_table_sql(spark, sql: str, base_dir: str, tables=None):
     """``CREATE TABLE name (cols...) ENGINE = <engine>[(args)] [ORDER BY
     ...] [PARTITION BY ...]`` → a managed :class:`MergeTreeTable` at
     ``base_dir/name`` (reference src/Parsers/ParserCreateQuery.h,
@@ -13087,7 +13081,9 @@ def create_table_sql(spark, sql: str, base_dir: str):
     empty table can still serve typed reads.
 
     Returns the MergeTreeTable; register it in a ``tables=`` dict to
-    reach it from ch_sql INSERT/ALTER statements.
+    reach it from ch_sql INSERT/ALTER statements.  Given ``tables``,
+    a ``base_dir/name`` that another table there still uses (one
+    renamed away from ``name``) is left alone for a fresh directory.
     """
     import os as _os
 
@@ -13255,7 +13251,7 @@ def create_table_sql(spark, sql: str, base_dir: str):
             kwargs["version_col"] = args[1]
     elif engine == "summing" and args:
         kwargs["sum_cols"] = args
-    path = _os.path.join(base_dir, name)
+    path = _unused_table_dir(_os.path.join(base_dir, name), name, tables)
     if _os.path.isdir(path):
         # CREATE TABLE starts empty — clear parts left behind by an
         # earlier session reusing the same managed-table name
@@ -13350,6 +13346,19 @@ def _register_distributed_alias(spark, name: str, local: str,
 def _default_table_dir() -> str:
     import os as _os
     return _os.path.join(_os.getcwd(), "spark-warehouse", "ch_tables")
+
+
+def _unused_table_dir(path: str, name: str, tables) -> str:
+    """``path``, or ``path_<n>`` when a table in ``tables`` other than
+    ``name`` still uses ``path``: RENAME keeps a table's storage, so a
+    new table under the old name must not clear it."""
+    used = {getattr(v, "path", None) for k, v in (tables or {}).items()
+            if k != name}
+    out, n = path, 0
+    while out in used:
+        n += 1
+        out = f"{path}_{n}"
+    return out
 
 
 class SqlDictionary:
@@ -13739,7 +13748,7 @@ def _create_table_statement(spark, text: str, tables, sample_by=None):
             if em0 and em0.group(1).lower() in _ENGINE_NAMES:
                 t0 = create_table_sql(
                     spark, text[:close0 + 1] + " " + am0.group(1),
-                    _default_table_dir())
+                    _default_table_dir(), tables)
                 if tables is not None:
                     tables[nm0] = t0
                 decl0 = ([f.name for f in spark.createDataFrame(
@@ -13772,7 +13781,8 @@ def _create_table_statement(spark, text: str, tables, sample_by=None):
             create = re.sub(
                 r"(`?\w+`?\s+)(ENGINE\s*=?\s*\w)", r"\1(%s) \2" % cols,
                 create, count=1, flags=re.IGNORECASE)
-            t = create_table_sql(spark, create, _default_table_dir())
+            t = create_table_sql(spark, create, _default_table_dir(),
+                                 tables)
             t.insert(df)
             if tables is not None:
                 tables[name] = t
@@ -13818,7 +13828,8 @@ def _create_table_statement(spark, text: str, tables, sample_by=None):
                                                 tables)
                     return None
                 zmap[zk] = name
-        t = create_table_sql(spark, text, _default_table_dir())
+        t = create_table_sql(spark, text, _default_table_dir(),
+                             tables)
         if tables is not None:
             tables[name] = t
         if getattr(t, "schema_ddl", None):
@@ -13863,7 +13874,8 @@ def _create_table_statement(spark, text: str, tables, sample_by=None):
             synth = (f"CREATE TABLE {cl.group(1)} "
                      f"({', '.join(srct.ch_decl_cols)}) "
                      f"ENGINE = MergeTree ORDER BY tuple()")
-            t0 = create_table_sql(spark, synth, _default_table_dir())
+            t0 = create_table_sql(spark, synth, _default_table_dir(),
+                                  tables)
             if tables is not None:
                 tables[cl.group(1)] = t0
             spark.createDataFrame([], t0.schema_ddl) \
@@ -13922,7 +13934,8 @@ def _create_table_statement(spark, text: str, tables, sample_by=None):
                 r"(?is)ENGINE\s*=?\s*EmbeddedRocksDB\b.*$",
                 f"ENGINE = ReplacingMergeTree ORDER BY "
                 f"`{pk_cols[0]}`", text)
-            t = create_table_sql(spark, new_text, _default_table_dir())
+            t = create_table_sql(spark, new_text, _default_table_dir(),
+                                 tables)
             t.always_final = True
             if tables is not None:
                 tables[name] = t
@@ -13982,7 +13995,8 @@ def _create_table_statement(spark, text: str, tables, sample_by=None):
             if len(eargs) >= 3:
                 import os as _os
                 t = JoinTable(spark,
-                              _os.path.join(_default_table_dir(), name),
+                              _unused_table_dir(_os.path.join(
+                                  _default_table_dir(), name), name, tables),
                               key_cols=eargs[2:],
                               strictness=eargs[0].lower(),
                               kind=eargs[1].lower())

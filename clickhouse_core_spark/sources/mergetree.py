@@ -546,8 +546,14 @@ class MergeTreeTable:
         """One part as a DataFrame, read with the schema the part was
         written with (its ``_schema.json``).  Per-part ``basePath``
         keeps hive partition discovery local to the part."""
-        with open(self._schema_path(part)) as fh:
-            schema = StructType.fromJson(json.load(fh))
+        try:
+            with open(self._schema_path(part)) as fh:
+                schema = StructType.fromJson(json.load(fh))
+        except FileNotFoundError:
+            raise FileNotFoundError(
+                f"MergeTree part {part} has no _schema.json: it was not "
+                f"written by MergeTreeTable.insert (or predates per-part "
+                f"schemas) and cannot be read") from None
         return (self.spark.read.option("basePath", part).schema(schema)
                 .parquet(part))
 

@@ -787,9 +787,9 @@ def test_drop_replica_keeps_shared_storage(spark):
 
 
 def test_drop_keeps_storage_reused_after_rename(spark):
-    """RENAME moves the storage directory to the new name; a new table
-    under the old name gets a directory of its own, so the renamed
-    table keeps its row, and dropping it leaves the new table's."""
+    """RENAME keeps the storage directory; a new table under the old
+    name gets a directory of its own, so the renamed table keeps its
+    row, and dropping it leaves the new table's."""
     from clickhouse_core_spark.plans.frontend import ch_sql
     tables = {}
     q = lambda s: ch_sql(spark, s, tables=tables)  # noqa: E731
@@ -805,32 +805,48 @@ def test_drop_keeps_storage_reused_after_rename(spark):
     q("DROP TABLE drop_ren")
 
 
-def test_rename_moves_the_table(spark):
-    """RENAME TABLE moves the name, its FINAL view and its storage:
-    the old name is gone, and re-creating it leaves the renamed
-    table's rows alone."""
-    import os
+def test_rename_moves_the_name_not_the_storage(spark):
+    """RENAME TABLE moves the name and its FINAL view: the old name is
+    gone, a lightweight DELETE made before the RENAME still holds, and
+    re-creating the old name leaves the renamed table's rows alone."""
     from clickhouse_core_spark.plans.frontend import ch_sql
     tables = {}
     q = lambda s: ch_sql(spark, s, tables=tables)  # noqa: E731
     rows = lambda s: sorted(tuple(r) for r in q(s).collect())  # noqa: E731
     q("CREATE TABLE rn (k UInt32, v UInt32) ENGINE = ReplacingMergeTree(v) "
       "ORDER BY k")
-    q("INSERT INTO rn VALUES (1, 1), (1, 2), (2, 5)")
+    q("INSERT INTO rn VALUES (1, 1), (1, 2), (2, 5), (4, 4)")
+    q("DELETE FROM rn WHERE k = 4")
+    path = tables["rn"].path
     q("RENAME TABLE rn TO rn2")
+    assert tables["rn2"].path == path
     assert rows("SELECT k, v FROM rn2 FINAL") == [(1, 2), (2, 5)]
     for stmt in ("SELECT k FROM rn", "SELECT k FROM rn FINAL"):
         with pytest.raises(Exception, match="rn"):
             q(stmt).collect()
     q("CREATE TABLE rn (k UInt32, v UInt32) ENGINE = ReplacingMergeTree(v) "
       "ORDER BY k")
+    assert tables["rn"].path != path
     q("INSERT INTO rn VALUES (9, 9)")
     q("INSERT INTO rn2 VALUES (3, 1)")
     assert rows("SELECT k, v FROM rn2") == [(1, 1), (1, 2), (2, 5), (3, 1)]
     assert rows("SELECT k, v FROM rn") == [(9, 9)]
-    assert os.path.basename(tables["rn2"].path) == "rn2"
     q("DROP TABLE rn")
     q("DROP TABLE rn2")
+
+
+def test_part_without_schema_file_names_the_part(spark, tmp_path):
+    """A part without ``_schema.json`` (written before parts carried
+    it, or assembled by hand) fails its read with an error naming the
+    part; nothing falls back to Parquet inference."""
+    import os
+    import re
+    t = MergeTreeTable(spark, str(tmp_path / "noschema"), order_by=["k"])
+    t.insert(spark.createDataFrame([(1, "v")], "k int, v string"))
+    part = t.parts()[0]
+    os.remove(os.path.join(part, "_schema.json"))
+    with pytest.raises(FileNotFoundError, match=re.escape(part)):
+        t.read_raw()
 
 
 def test_rocksdb_keeps_latest_value_across_mutations(spark):
