@@ -3609,8 +3609,6 @@ def _string_bytes_entropy(s) -> Column:
 # pointInEllipses.cpp, FunctionsHashing.h (keyed sipHash registrations),
 # variant/dynamic introspection over the JSON carrier (SURVEY §1.2).
 
-_EPOCH_TS = "1970-01-01 00:00:00"
-
 
 def _point_in_ellipses(x, y, *params) -> Column:
     """pointInEllipses(x, y, x0, y0, a0, b0, x1, y1, a1, b1, ...):

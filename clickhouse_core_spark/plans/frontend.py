@@ -4155,21 +4155,11 @@ def _regex_quote(literal: str) -> str:
     return literal
 
 
-_MYSQL_TO_SPARK = [
-    ("%Y", "yyyy"), ("%y", "yy"), ("%m", "MM"), ("%d", "dd"),
-    ("%H", "HH"), ("%i", "mm"), ("%S", "ss"), ("%M", "MMMM"),
-    ("%W", "EEEE"), ("%a", "EEE"), ("%b", "MMM"), ("%j", "DDD"),
-    ("%F", "yyyy-MM-dd"), ("%T", "HH:mm:ss"), ("%e", "d"), ("%%", "%"),
-]
-
-
 def _mysql_fmt_literal(literal: str) -> str:
+    from ..functions.registry import _mysql_fmt
     s = literal.strip()
     if len(s) >= 2 and s[0] == "'" and s[-1] == "'":
-        inner = s[1:-1]
-        for k, v in _MYSQL_TO_SPARK:
-            inner = inner.replace(k, v)
-        return f"'{inner}'"
+        return f"'{_mysql_fmt(s[1:-1])}'"
     return literal
 
 
@@ -8866,7 +8856,7 @@ def _rewrite_joinget(text: str, tables) -> str:
             # plain joinGet yields the value type's DEFAULT on a miss
             # (StorageJoin::joinGet); only joinGetOrNull yields NULL
             dt = None
-            ddl = getattr(t, "schema_ddl", "") or ""
+            ddl = _decls(t).schema_ddl
             dm = re.search(rf"`?{re.escape(col)}`?\s+(\w+)", ddl)
             if dm:
                 dt = dm.group(1).lower()
@@ -9982,8 +9972,11 @@ def _rewrite_virtual_columns(spark, text: str, tables: dict) -> str:
     with the virtuals materialized from the parquet file paths and
     point the query at it.  A bare ``*`` in the select list expands to
     the BASE columns first (CH stars never include virtuals)."""
+    from ..sources.engines import MemoryTable
+    from ..sources.mergetree import MergeTreeTable
+
     for nm, tt in list(tables.items()):
-        if nm.startswith("__") or not hasattr(tt, "read_raw"):
+        if nm.startswith("__") or not isinstance(tt, MergeTreeTable):
             continue
         if not re.search(rf"(?is)\bFROM\s+`?{re.escape(nm)}`?(?!\w)",
                          text):
@@ -10033,11 +10026,13 @@ def _rewrite_virtual_columns(spark, text: str, tables: dict) -> str:
                       lambda m: m.group(1) + star, text, count=1)
         text = re.sub(rf"(?is)\bFROM\s+`?{re.escape(nm)}`?(?!\w)",
                       f"FROM {vname}", text)
-    # view-backed tables (Memory/File analogs — no parts on disk):
-    # the virtuals exist but carry empty paths
+    # Memory tables and views (no parts on disk): the virtuals exist
+    # but carry empty paths
     for fm in re.finditer(r"(?is)\bFROM\s+`?(\w+)`?(?!\w)", text):
         nm = fm.group(1)
-        if nm.startswith("__") or (tables or {}).get(nm) is not None:
+        t = (tables or {}).get(nm)
+        if nm.startswith("__") or (
+                t is not None and not isinstance(t, MemoryTable)):
             continue
         try:
             df = spark.table(nm)
@@ -10098,8 +10093,9 @@ def _ch_sql_impl(spark, sql: str,
     if tables and re.search(r"(?i)\bSAMPLE\b", text):
         # tables created with SAMPLE BY carry their sampling key
         # (golden 03290_final_sample)
+        from ..sources.mergetree import MergeTreeTable
         for _tn, _tb in list(tables.items()):
-            _se = getattr(_tb, "sample_by_expr", None)
+            _se = isinstance(_tb, MergeTreeTable) and _tb.sample_by_expr
             if _se and (_tn not in (sample_by or {})):
                 sample_by = dict(sample_by or {})
                 sample_by[_tn] = _se
@@ -10140,19 +10136,10 @@ def _ch_sql_impl(spark, sql: str,
         # typeof() cannot see it (goldens 01825_type_json_2/18)
         _fm9 = re.search(r"(?i)\bFROM\s+`?(\w+)`?", text)
         _tn9 = _fm9.group(1) if _fm9 else None
-        if _tn9 is not None:
-            _chmaps = [getattr(tables.get(_tn9), "obj_ch_types",
-                               None) or {},
-                       ((tables.get("__decl__") or {}).get(_tn9)
-                        or {}).get("obj_ch_types") or {}]
-        else:
-            _chmaps = [getattr(_tb0, "obj_ch_types", None) or {}
-                       for _tb0 in tables.values()]
-            _chmaps += [(d0 or {}).get("obj_ch_types") or {}
-                        for d0 in (tables.get("__decl__")
-                                   or {}).values()]
-        for _chm0 in _chmaps:
-            for _c0, _nm0 in _chm0.items():
+        _chmaps = ([_decls(tables.get(_tn9))] if _tn9 is not None
+                   else _session_decls(tables).values())
+        for _d9 in _chmaps:
+            for _c0, _nm0 in _d9.obj_ch_types.items():
                 text = re.sub(
                     rf"(?i)\btoTypeName\s*\(\s*`?{re.escape(_c0)}`?"
                     rf"\s*\)", "'" + _nm0.replace("'", "''") + "'",
@@ -10162,32 +10149,19 @@ def _ch_sql_impl(spark, sql: str,
     # refresh the Dynamic-subcolumn rewrite context from this
     # session's declarations (see _DYN_CTX)
     if tables is not None:
-        dyn0: set = set()
-        tcols0: dict = {}
-        for tn0, tv0 in tables.items():
-            if tn0.startswith("__"):
-                continue
-            dyn0 |= set(getattr(tv0, "dynamic_cols", None) or ())
-            ddl0 = getattr(tv0, "schema_ddl", None)
-            if ddl0:
-                tcols0[tn0] = set(re.findall(r"`([^`]+)`", ddl0))
-        for tn0, rec0 in (tables.get("__decl__") or {}).items():
-            dyn0 |= set(rec0.get("dynamic") or ())
-            if rec0.get("columns"):
-                tcols0[tn0] = set(rec0["columns"])
-        _DYN_CTX["dynamic"], _DYN_CTX["tables"] = dyn0, tcols0
+        decls0 = _session_decls(tables)
+        _DYN_CTX["dynamic"] = set().union(
+            *(d0.dynamic for d0 in decls0.values()))
+        _DYN_CTX["tables"] = {tn0: set(d0.columns)
+                              for tn0, d0 in decls0.items()
+                              if d0.schema_ddl}
         # element-type defaults for declared ARRAY columns — the
         # arrayShift fill sniffer resolves bare-column args here
         # (golden 02845 arrayShiftLeft(a, 3) fills 0, not NULL)
         elem0: dict = {}
-        for tn0, tv0 in tables.items():
-            if tn0.startswith("__"):
-                continue
-            ddl0 = getattr(tv0, "schema_ddl", None)
-            if not ddl0:
-                continue
+        for d0 in decls0.values():
             for em0 in re.finditer(
-                    r"`([^`]+)`\s+ARRAY<\s*(\w+)\s*>", ddl0,
+                    r"`([^`]+)`\s+ARRAY<\s*(\w+)\s*>", d0.schema_ddl,
                     re.IGNORECASE):
                 t0 = em0.group(2).upper()
                 elem0[em0.group(1).lower()] = (
@@ -10229,11 +10203,8 @@ def _ch_sql_impl(spark, sql: str,
         text = re.sub(r"(?i)\b(NOT\s+)?IN\s+(`?)([\w.]+)\2"
                       r"(?![\w.(`])", _in_tbl, text)
     if tables is not None:
-        jcols = set()
-        for tb in tables.values():
-            jcols |= getattr(tb, "json_cols", set()) or set()
-        for d in (tables.get("__decl__") or {}).values():
-            jcols |= set((d or {}).get("json") or ())
+        jcols = set().union(
+            *(d.json for d in _session_decls(tables).values()))
         # SELECT aliases bound to a ::JSON cast read like JSON columns
         # (dotted subcolumns over the cast result; 03272 goldens)
         jcols |= {al for al in re.findall(
@@ -10254,15 +10225,8 @@ def _ch_sql_impl(spark, sql: str,
         # Array(T), NestedUtils::flatten); backtick bare dotted
         # references (SELECT/ORDER BY/mutation predicates) so Spark
         # resolves the column instead of a struct access
-        dotted = set()
-        for tb in tables.values():
-            ddl0 = getattr(tb, "schema_ddl", None)
-            if ddl0:
-                dotted |= {c for c in re.findall(r"`([^`]+)`", ddl0)
-                           if "." in c}
-        for d0 in (tables.get("__decl__") or {}).values():
-            dotted |= {c for c in ((d0 or {}).get("columns") or ())
-                       if "." in c}
+        dotted = {c for d0 in _session_decls(tables).values()
+                  for c in d0.columns if "." in c}
         for c in sorted(dotted, key=len, reverse=True):
             if re.search(rf"(?<![\w.`]){re.escape(c)}(?![\w.`])",
                          text):
@@ -10568,8 +10532,9 @@ def _ch_sql_impl(spark, sql: str,
                  r"(?:\s+DEDUPLICATE(?:\s+BY\s+([\w\s,`]+))?)?\s*$",
                  text, re.IGNORECASE)
     if m:
+        from ..sources.mergetree import MergeTreeTable
         table = (tables or {}).get(m.group(1))
-        if table is None:
+        if not isinstance(table, MergeTreeTable):
             raise ValueError(f"OPTIMIZE needs a MergeTreeTable for "
                              f"{m.group(1)!r}")
         if "DEDUPLICATE" in text.upper():
@@ -10595,19 +10560,18 @@ def _ch_sql_impl(spark, sql: str,
         # columns are still the string carrier (not the finalized
         # tuple a SELECT sees) — rewrite their subcolumn reads to
         # get_json_object like declared-JSON columns (golden 02887)
-        ocols = ((getattr(table, "obj_cols", None) or set())
-                 | (getattr(table, "obj_array_cols", None) or set()))
+        ocols = _decls(table).obj | _decls(table).obj_array
         if ocols and any(re.search(rf"\b{re.escape(c)}\s*\.", predtext)
                          for c in ocols):
             predtext = _rewrite_json_subcolumns(predtext, ocols)
         pred = F.expr(_bool_pred_sql(_rewrite_json_struct_compare(
             _translate_expr(predtext))))
         if table is None:
-            # view-backed (Memory-analog) table: rewrite the view.
-            # NOTE (r13 advice): if `name` shadows a STANDARD_TABLES
-            # view, Catalog.register_all() is idempotent and will NOT
-            # restore the parquet-backed view on the next query entry —
-            # call register_all(force=True) to undo the shadow.
+            # undeclared view: rewrite the view.  If `name` shadows a
+            # STANDARD_TABLES view, Catalog.register_all() is
+            # idempotent and will NOT restore the parquet-backed view
+            # on the next query entry — call register_all(force=True)
+            # to undo the shadow.
             try:
                 df_v = spark.table(name)
             except Exception:
@@ -10920,13 +10884,11 @@ def _grouping_sets_key_defaults(spark, translated: str, tables):
     except Exception:
         return translated
     t = (tables or {}).get(fm.group(1))
-    decl_rec = ((tables or {}).get("__decl__") or {}).get(fm.group(1))
-    if t is None and decl_rec is None:
+    if t is None:
         # only DECLARED tables carry non-Nullable metadata; a bare
         # catalog view's parquet columns may hold genuine NULL groups
         return translated
-    nullc = set(getattr(t, "nullable_cols", None) or set())
-    nullc |= set((decl_rec or {}).get("nullable") or set())
+    nullc = _decls(t).nullable
     from pyspark.sql import types as _T
     proj_end = next((m.start() for m in re.finditer(
         r"(?i)\bFROM\b", translated) if m.start() in tops),
@@ -11057,20 +11019,9 @@ def _keyless_identity_defaults_df(df, translated: str, tables):
         # (AggregateFunctionNull keeps NULL for the no-values state)
         non_nullable: set = set()
         nullable: set = set()
-        for key, t in (tables or {}).items():
-            if key.startswith("__") or t is None \
-                    or isinstance(t, dict):
-                continue
-            nset = set(getattr(t, "nullable_cols", None) or ())
-            nullable |= nset
-            ddl0 = getattr(t, "schema_ddl", None)
-            if ddl0:
-                non_nullable |= set(
-                    re.findall(r"`([^`]+)`", ddl0)) - nset
-        for d in ((tables or {}).get("__decl__") or {}).values():
-            nset = set((d or {}).get("nullable") or ())
-            nullable |= nset
-            non_nullable |= set((d or {}).get("columns") or ()) - nset
+        for d in _session_decls(tables).values():
+            nullable |= d.nullable
+            non_nullable |= set(d.columns) - d.nullable
         non_nullable -= nullable
         if len(items) != len(df.columns):
             return df
@@ -11114,71 +11065,42 @@ def _keyless_identity_defaults_df(df, translated: str, tables):
 
 
 def _run_sql(spark, translated: str):
-    """spark.sql with the alias-in-WHERE and ambiguous-reference
-    retries (see _retry_alias_in_where / _retry_ambiguous_ref).
-    The CH NULLS-direction rewrite (_rewrite_order_by_null_direction)
-    applies transparently at each submit so the retry pattern-matchers
-    keep operating on the clean translated text."""
+    """spark.sql with the error-triggered retries: each round tries
+    its ``_retry_*`` passes in order on the last failure and submits
+    the first rewrite that applies (see ``_RETRY_ROUNDS``).  Spark's
+    SQLQueryContextLogger stays quiet meanwhile, so a statement a
+    retry rescues logs no ERROR; one that fails for good still
+    raises.  The CH NULLS-direction rewrite
+    (_rewrite_order_by_null_direction) applies transparently at each
+    submit so the retry pattern-matchers keep operating on the clean
+    translated text."""
+    import logging
+
+    from pyspark.logger import PySparkLogger
+
     def _submit(text: str):
         if re.search(r"(?i)\bORDER\s+BY\b", text):
             text = _rewrite_order_by_null_direction(text)
         return spark.sql(text)
 
+    # PySparkLogger, not logging.getLogger: a plain Logger cached
+    # under this name breaks pyspark's logger.exception(errorClass=)
+    qlog = PySparkLogger.getLogger("SQLQueryContextLogger")
+    level = qlog.level
+    qlog.setLevel(logging.CRITICAL)
     try:
-        return _submit(translated)
-    except Exception as e:
-        retried = _retry_alias_in_where(translated, e)
-        if retried is None:
-            retried = _retry_lateral_agg_alias(translated, e)
-        if retried is None:
-            retried = _retry_ts_num_compare(translated, e)
-        if retried is None:
-            retried = _retry_ambiguous_ref(translated, e)
-        if retried is None:
-            retried = _retry_collate_drop(translated, e)
-        if retried is None:
-            retried = _retry_using_alias(translated, e)
-        if retried is None:
-            retried = _retry_using_qualified(translated, e)
-        if retried is None:
-            retried = _retry_octet_length_array(translated, e)
-        if retried is None:
-            retried = _retry_missing_aggregation(translated, e)
-        if retried is None:
-            retried = _retry_bool_arith(translated, e)
-        if retried is None:
-            retried = _retry_bool_agg_arg(translated, e)
-        if retried is None:
-            retried = _retry_not_numeric(translated, e)
-        if retried is None:
-            retried = _retry_int_logical(translated, e)
-        if retried is None:
-            retried = _retry_order_by_hidden(translated, e)
-        if retried is None:
-            retried = _retry_distinct_order_expr(translated, e)
-        if retried is None:
-            raise
-        try:
-            return _submit(retried)
-        except Exception as e2:
-            retried2 = _retry_ambiguous_ref(retried, e2)
-            if retried2 is None:
-                retried2 = _retry_using_alias(retried, e2)
-            if retried2 is None:
-                retried2 = _retry_using_qualified(retried, e2)
-            if retried2 is None:
-                retried2 = _retry_int_logical(retried, e2)
-            if retried2 is None:
-                raise
+        text = translated
+        for passes in _RETRY_ROUNDS:
             try:
-                return _submit(retried2)
-            except Exception as e3:
-                # one more USING-qualified pass: each retry rewrites
-                # only the single alias.key the resolver reported
-                retried3 = _retry_using_qualified(retried2, e3)
-                if retried3 is None:
+                return _submit(text)
+            except Exception as e:
+                text = next((r for r in (p(text, e) for p in passes)
+                             if r is not None), None)
+                if text is None:
                     raise
-                return _submit(retried3)
+        return _submit(text)
+    finally:
+        qlog.setLevel(level)
 
 
 def _retry_collate_drop(translated: str, err: Exception):
@@ -11847,6 +11769,24 @@ def _retry_alias_in_where(translated: str, err: Exception):
     return "".join(out) if changed else None
 
 
+# _run_sql's retry rounds: round 1 tries every pass on the first
+# failure; a rewritten statement that still fails gets round 2, then
+# one more USING-qualified pass (each rewrites only the single
+# alias.key the resolver reported)
+_RETRY_ROUNDS = (
+    (_retry_alias_in_where, _retry_lateral_agg_alias,
+     _retry_ts_num_compare, _retry_ambiguous_ref, _retry_collate_drop,
+     _retry_using_alias, _retry_using_qualified,
+     _retry_octet_length_array, _retry_missing_aggregation,
+     _retry_bool_arith, _retry_bool_agg_arg, _retry_not_numeric,
+     _retry_int_logical, _retry_order_by_hidden,
+     _retry_distinct_order_expr),
+    (_retry_ambiguous_ref, _retry_using_alias, _retry_using_qualified,
+     _retry_int_logical),
+    (_retry_using_qualified,),
+)
+
+
 # ------------------------------------------------- utility statements
 # Reference interpreters: InterpreterShowTablesQuery.h,
 # InterpreterDescribeQuery.h, InterpreterExistsQuery.h,
@@ -12346,11 +12286,12 @@ def _utility_statement(spark, text: str, tables):
         # 4-space column indent (formatAST; golden 00564) — the
         # DECLARED CH types when recorded (golden 02997: `t` DateTime,
         # not the carrier's DateTime64), the Spark schema otherwise
-        decl = getattr(t, "ch_decl_cols", None)
-        col_lines = ([f"    {c}" for c in decl] if decl else
+        decls = _decls(t)
+        col_lines = ([f"    {c}" for c in decls.decl_texts]
+                     if decls.decl_texts else
                      [f"    `{f.name}` {_spark_type_to_ch(f.dataType)}"
                       for f in df.schema.fields])
-        stats2 = getattr(t, "ch_col_stats", None) or {}
+        stats2 = decls.stats
         if stats2:
             # STATISTICS clauses render in canonical kind order after
             # the type (StatisticsDescription formatting; golden 02864)
@@ -12360,7 +12301,7 @@ def _utility_statement(spark, text: str, tables):
                     col_lines[k2] = (line2 + " STATISTICS("
                                      + ", ".join(stats2[nm9.group(1)])
                                      + ")")
-        codecs2 = getattr(t, "ch_col_codecs", None) or {}
+        codecs2 = decls.codecs
         if codecs2:
             # CODEC clauses render canonically after the type
             # (getCodecDesc; golden 01455)
@@ -12371,8 +12312,7 @@ def _utility_statement(spark, text: str, tables):
                                      + codecs2[nm9.group(1)] + ")")
         # PROJECTION declarations render as their own block
         # (formatAST projection formatting, golden 02997)
-        for pname, psel in getattr(t, "ch_projection_texts", None) \
-                or ():
+        for pname, psel in decls.projections:
             sm2 = re.match(r"(?is)^\s*SELECT\s+(.*?)"
                            r"(?:\s+ORDER\s+BY\s+(.*?))?\s*$", psel)
             lines = [f"    PROJECTION {pname}", "    ("]
@@ -12641,23 +12581,21 @@ def _utility_statement(spark, text: str, tables):
             raise ValueError(f"DESCRIBE: unknown table {m.group(1)!r}")
         t = (tables or {}).get(m.group(1))
         extend_obj = (m.group(2) or "0").strip() == "1"
-        dflts = getattr(t, "column_defaults", None) or {}
-        nullc = getattr(t, "nullable_cols", None) or set()
-        codecs = getattr(t, "ch_col_codecs", None) or {}
-        objc = getattr(t, "obj_cols", None) or set()
+        decls = _decls(t)
+        dflts, nullc = decls.defaults, decls.nullable
+        codecs, objc = decls.codecs, decls.obj
 
         def _desc_type(f):
             if f.name in objc:
                 if extend_obj:
                     # describe_extend_object_types=1: the finalized
                     # tuple name (golden 01825_type_json_describe)
-                    cht = (getattr(t, "obj_ch_types", None)
-                           or {}).get(f.name)
+                    cht = decls.obj_ch_types.get(f.name)
                     if cht:
                         return cht
                 # DESCRIBE shows the DECLARED Object type, lowercase
                 # argument (golden 01825_type_json_describe)
-                for d0 in getattr(t, "ch_decl_cols", None) or ():
+                for d0 in decls.decl_texts:
                     nm0 = re.match(r"`?(\w+)`?\s+(.*)", d0)
                     if nm0 and nm0.group(1) == f.name:
                         return re.sub(
@@ -12725,7 +12663,7 @@ def _utility_statement(spark, text: str, tables):
         old, new = m.group(1), m.group(2)
         t = (tables or {}).get(old)
         df = None
-        if not hasattr(t, "read_views"):
+        if t is None:
             df = _resolve_view(spark, old, tables)
             if df is None:
                 raise ValueError(f"RENAME: unknown table {old!r}")
@@ -12734,9 +12672,10 @@ def _utility_statement(spark, text: str, tables):
         spark.catalog.dropTempView(old)
         spark.catalog.dropTempView(f"{old}__final")
         if df is None:
-            # a MergeTree table keeps its storage directory (the
-            # reference's Atomic database keeps data under a per-table
-            # UUID); CREATE TABLE <old> then picks a directory of its own
+            # the table object moves: a MergeTree table keeps its
+            # storage directory (the reference's Atomic database keeps
+            # data under a per-table UUID); CREATE TABLE <old> then
+            # picks a directory of its own
             _register_table_views(spark, new, t, tables)
         else:
             df.createOrReplaceTempView(new)
@@ -12766,24 +12705,14 @@ def _utility_statement(spark, text: str, tables):
     if m:
         name = m.group(1)
         t = (tables or {}).get(name)
-        if t is not None and hasattr(t, "parts"):
-            t._drop_parts(t.parts())
-            # an emptied Object('json') column resets its unified
-            # type (the next insert starts fresh)
-            for attr in ("obj_trees", "obj_ch_types"):
-                if getattr(t, attr, None):
-                    getattr(t, attr).clear()
+        if hasattr(t, "truncate"):
+            t.truncate()
             _register_table_views(spark, name, t, tables)
             return None
         df = _resolve_view(spark, name, tables)
         if df is None:
             raise ValueError(f"TRUNCATE: unknown table {name!r}")
         df.limit(0).createOrReplaceTempView(name)
-        if tables is not None:
-            (tables.get("__viewraw__") or {}).pop(name, None)
-            rec9 = (tables.get("__decl__") or {}).get(name) or {}
-            for k9 in ("obj_trees", "obj_ch_types"):
-                (rec9.get(k9) or {}).clear()
         return None
 
     m = re.match(r"^CHECK\s+TABLE\s+`?(\w+)`?\s*$", text, re.IGNORECASE)
@@ -13071,6 +13000,119 @@ def _storage_clause_exprs(tail: str, kw: str) -> list[str] | None:
             if c.strip()]
 
 
+def _decls(t):
+    """The declared columns of session table ``t``: its ColumnDecls,
+    or an empty record for an undeclared view (None) or a
+    dictionary."""
+    from ..sources.mergetree import ColumnDecls
+    return getattr(t, "decls", None) or ColumnDecls()
+
+
+def _session_decls(tables) -> dict:
+    """name -> ColumnDecls of every session table that has one."""
+    return {n: t.decls for n, t in (tables or {}).items()
+            if not n.startswith("__") and hasattr(t, "decls")}
+
+
+def _parse_column_decls(cols_src: str):
+    """The one parser of a CREATE TABLE column list (reference
+    ParserColumnDeclarationList / ColumnsDescription) into a
+    :class:`~clickhouse_core_spark.sources.mergetree.ColumnDecls`:
+    Spark DDL of the stored columns (Nested(a T, ..) expands to sibling
+    `n.a` Array(T) columns), the declared CH types, Nullable, DEFAULT /
+    MATERIALIZED, JSON / Object / Dynamic, DateTime('tz'),
+    DateTime64(p), STATISTICS and CODEC clauses, and the PROJECTION
+    declarations."""
+    from ..sources.mergetree import ColumnDecls
+
+    d = ColumnDecls()
+    schema_parts = []
+    for coldef in _split_top_commas(cols_src):
+        pm = re.match(r"(?is)\s*PROJECTION\s+(`?\w+`?)\s*\((.*)\)\s*$",
+                      coldef)
+        if pm:
+            d.projections.append((pm.group(1).strip("`"),
+                                  pm.group(2).strip()))
+        if re.match(r"(?i)\s*(PROJECTION|INDEX|CONSTRAINT|"
+                    r"PRIMARY\s+KEY)\b", coldef):
+            continue            # table-level declarations, not columns
+        toks = coldef.strip().split(None, 1)
+        if len(toks) < 2:
+            continue
+        cname = toks[0].strip("`")
+        # Nested(a T, b U) EXPANDS to sibling array columns `n.a`
+        # Array(T), `n.b` Array(U) (reference DataTypeNested /
+        # NestedUtils::flatten)
+        nm = re.match(r"(?is)^Nested\s*\((.*)\)\s*$", toks[1].strip())
+        if nm:
+            for sub in _split_top_commas(nm.group(1)):
+                st = sub.strip().split(None, 1)
+                if len(st) != 2:
+                    continue
+                schema_parts.append(
+                    f"`{cname}.{st[0].strip('`')}` ARRAY<"
+                    f"{_ch_decl_type_to_spark(_decl_type(st[1]))}>")
+            continue
+        ctype = _decl_type(toks[1])
+        # DateTime[64]('tz') columns parse naive strings in THAT zone
+        # (DataTypeDateTime timezone argument)
+        tzm = re.match(r"(?i)\s*DateTime(?:64)?\s*\("
+                       r"(?:\d+\s*,\s*)?'([^']+)'\s*\)", ctype)
+        if tzm:
+            d.timezones[cname] = tzm.group(1)
+        scm = re.match(r"(?i)\s*(?:Nullable\s*\(\s*)?DateTime64\s*\("
+                       r"\s*(\d+)", ctype)
+        if scm:
+            d.dt64_scales[cname] = min(int(scm.group(1)), 6)
+        if re.match(r"(?i)\s*Nullable\s*\(", ctype):
+            d.nullable.add(cname)
+        if re.match(r"(?i)\s*Object\s*\(", ctype):
+            # deprecated Object('json'): reads materialize the
+            # row-union named tuple (DataTypeObject finalize —
+            # goldens 01825), unlike the string-carrier JSON type
+            d.obj.add(cname)
+            if re.match(r"(?i)\s*Object\s*\(\s*Nullable", ctype):
+                # Object(Nullable('json')): EVERY path is Nullable
+                # (golden 01825_type_json_nullable)
+                d.obj_nullable.add(cname)
+        elif re.match(r"(?i)\s*Array\s*\(\s*Object\s*\(", ctype):
+            # Array(Object('json')): per-ELEMENT tuple finalize
+            # (golden 01825_type_json_in_array)
+            d.obj_array.add(cname)
+        elif re.match(r"(?i)\s*JSON\b", ctype):
+            d.json.add(cname)
+        if re.match(r"(?i)\s*Dynamic\b", ctype):
+            d.dynamic.add(cname)
+        stm = re.search(r"(?i)\bSTATISTICS\s*\(([^)]*)\)", toks[1])
+        if stm:
+            kinds0 = [x for x in
+                      (s.strip() for s in stm.group(1).split(","))
+                      if x]
+            _validate_stat_types(kinds0, ctype)
+            d.stats[cname] = sorted(
+                {k.lower() for k in kinds0},
+                key=_STAT_TYPES.index)
+        ccm = re.search(r"(?i)\bCODEC\s*\(", toks[1])
+        if ccm:
+            copen = toks[1].index("(", ccm.start())
+            cend = _matching_paren(toks[1], copen)
+            if cend > 0:
+                d.codecs[cname] = _canon_codec_text(
+                    toks[1][copen + 1:cend], ctype)
+        schema_parts.append(
+            f"`{cname}` {_ch_decl_type_to_spark(ctype)}")
+        d.decl_texts.append(f"`{cname}` {ctype}")
+        dm = re.search(r"(?i)\b(DEFAULT|MATERIALIZED)\s+(.+?)"
+                       r"(?:\s+(?:CODEC|TTL|COMMENT)\b.*)?$",
+                       toks[1].strip())
+        if dm:
+            d.defaults[cname] = _translate_expr(dm.group(2).strip())
+            if dm.group(1).upper() == "MATERIALIZED":
+                d.materialized.add(cname)
+    d.schema_ddl = ", ".join(schema_parts)
+    return d
+
+
 def create_table_sql(spark, sql: str, base_dir: str, tables=None):
     """``CREATE TABLE name (cols...) ENGINE = <engine>[(args)] [ORDER BY
     ...] [PARTITION BY ...]`` → a managed :class:`MergeTreeTable` at
@@ -13121,106 +13163,7 @@ def create_table_sql(spark, sql: str, base_dir: str, tables=None):
     sample_by_expr = (_translate_expr(sb[0])
                       if sb else None)
 
-    schema_parts = []
-    col_defaults: dict[str, str] = {}
-    col_timezones: dict[str, str] = {}
-    nullable_cols: set[str] = set()
-    materialized_cols: set[str] = set()
-    json_cols: set[str] = set()
-    dynamic_cols: set[str] = set()
-    col_stats: dict[str, list] = {}
-    col_codecs: dict[str, str] = {}
-    obj_cols: set[str] = set()
-    obj_array_cols: set[str] = set()
-    obj_nullable_cols: set[str] = set()
-    decl_texts: list[str] = []
-    projection_texts: list[str] = []
-    dt64_scales: dict[str, int] = {}
-    for coldef in _split_top_commas(cols_src):
-        pm = re.match(r"(?is)\s*PROJECTION\s+(`?\w+`?)\s*\((.*)\)\s*$",
-                      coldef)
-        if pm:
-            projection_texts.append((pm.group(1).strip("`"),
-                                     pm.group(2).strip()))
-        if re.match(r"(?i)\s*(PROJECTION|INDEX|CONSTRAINT|"
-                    r"PRIMARY\s+KEY)\b", coldef):
-            continue            # table-level declarations, not columns
-        toks = coldef.strip().split(None, 1)
-        if len(toks) < 2:
-            continue
-        cname = toks[0].strip("`")
-        # Nested(a T, b U) EXPANDS to sibling array columns `n.a`
-        # Array(T), `n.b` Array(U) (reference DataTypeNested /
-        # NestedUtils::flatten)
-        nm = re.match(r"(?is)^Nested\s*\((.*)\)\s*$", toks[1].strip())
-        if nm:
-            for sub in _split_top_commas(nm.group(1)):
-                st = sub.strip().split(None, 1)
-                if len(st) != 2:
-                    continue
-                schema_parts.append(
-                    f"`{cname}.{st[0].strip('`')}` ARRAY<"
-                    f"{_ch_decl_type_to_spark(_decl_type(st[1]))}>")
-            continue
-        # DateTime[64]('tz') columns parse naive strings in THAT zone
-        # (DataTypeDateTime timezone argument)
-        tzm = re.match(r"(?i)\s*DateTime(?:64)?\s*\("
-                       r"(?:\d+\s*,\s*)?'([^']+)'\s*\)",
-                       _decl_type(toks[1]))
-        if tzm:
-            col_timezones[cname] = tzm.group(1)
-        scm = re.match(r"(?i)\s*(?:Nullable\s*\(\s*)?DateTime64\s*\("
-                       r"\s*(\d+)", _decl_type(toks[1]))
-        if scm:
-            dt64_scales[cname] = min(int(scm.group(1)), 6)
-        if re.match(r"(?i)\s*Nullable\s*\(", _decl_type(toks[1])):
-            nullable_cols.add(cname)
-        if re.match(r"(?i)\s*Object\s*\(", _decl_type(toks[1])):
-            # deprecated Object('json'): reads materialize the
-            # row-union named tuple (DataTypeObject finalize —
-            # goldens 01825), unlike the string-carrier JSON type
-            obj_cols.add(cname)
-            if re.match(r"(?i)\s*Object\s*\(\s*Nullable",
-                        _decl_type(toks[1])):
-                # Object(Nullable('json')): EVERY path is Nullable
-                # (golden 01825_type_json_nullable)
-                obj_nullable_cols.add(cname)
-        elif re.match(r"(?i)\s*Array\s*\(\s*Object\s*\(",
-                      _decl_type(toks[1])):
-            # Array(Object('json')): per-ELEMENT tuple finalize
-            # (golden 01825_type_json_in_array)
-            obj_array_cols.add(cname)
-        elif re.match(r"(?i)\s*JSON\b", _decl_type(toks[1])):
-            json_cols.add(cname)
-        if re.match(r"(?i)\s*Dynamic\b", _decl_type(toks[1])):
-            dynamic_cols.add(cname)
-        stm = re.search(r"(?i)\bSTATISTICS\s*\(([^)]*)\)", toks[1])
-        if stm:
-            kinds0 = [x for x in
-                      (s.strip() for s in stm.group(1).split(","))
-                      if x]
-            _validate_stat_types(kinds0, _decl_type(toks[1]))
-            col_stats[cname] = sorted(
-                {k.lower() for k in kinds0},
-                key=_STAT_TYPES.index)
-        ccm = re.search(r"(?i)\bCODEC\s*\(", toks[1])
-        if ccm:
-            cend = _matching_paren(toks[1],
-                                   toks[1].index("(", ccm.start()))
-            if cend > 0:
-                col_codecs[cname] = _canon_codec_text(
-                    toks[1][toks[1].index("(", ccm.start()) + 1:cend],
-                    _decl_type(toks[1]))
-        schema_parts.append(
-            f"`{cname}` {_ch_decl_type_to_spark(_decl_type(toks[1]))}")
-        decl_texts.append(f"`{cname}` {_decl_type(toks[1])}")
-        dm = re.search(r"(?i)\b(DEFAULT|MATERIALIZED)\s+(.+?)"
-                       r"(?:\s+(?:CODEC|TTL|COMMENT)\b.*)?$",
-                       toks[1].strip())
-        if dm:
-            col_defaults[cname] = _translate_expr(dm.group(2).strip())
-            if dm.group(1).upper() == "MATERIALIZED":
-                materialized_cols.add(cname)
+    decls = _parse_column_decls(cols_src)
 
     kwargs: dict = {}
     # deprecated OLD-STYLE engine args — MergeTree(date, [sample,]
@@ -13260,22 +13203,9 @@ def create_table_sql(spark, sql: str, base_dir: str, tables=None):
     table = MergeTreeTable(spark, path,
                            order_by=order_by,
                            partition_by=partition_by, engine=engine,
-                           column_defaults=col_defaults or None,
+                           column_defaults=decls.defaults or None,
                            **kwargs)
-    table.schema_ddl = ", ".join(schema_parts)
-    table.ch_decl_cols = decl_texts
-    table.ch_projection_texts = projection_texts
-    table.dt64_scales = dt64_scales
-    table.col_timezones = col_timezones
-    table.nullable_cols = nullable_cols
-    table.materialized_cols = materialized_cols
-    table.json_cols = json_cols
-    table.obj_cols = obj_cols
-    table.obj_array_cols = obj_array_cols
-    table.obj_nullable_cols = obj_nullable_cols
-    table.dynamic_cols = dynamic_cols
-    table.ch_col_stats = col_stats
-    table.ch_col_codecs = col_codecs
+    table.decls = decls
     table.sample_by_expr = sample_by_expr
     return table
 
@@ -13710,12 +13640,16 @@ def _create_table_statement(spark, text: str, tables, sample_by=None):
     (reference src/Interpreters/InterpreterCreateQuery.h): MergeTree
     family becomes a managed MergeTreeTable under
     spark-warehouse/ch_tables (registered in ``tables`` when given and
-    as a temp view once it has data); Memory/other engines register the
-    (empty or CTAS) DataFrame as a temp view.
+    as a temp view once it has data); a column list on any other engine
+    makes a MemoryTable (a JoinTable for ENGINE = Join) held the same
+    way; column-less CTAS and clones register a plain temp view.
 
     ``IF NOT EXISTS`` on a table that already exists is a NO-OP that
     preserves its data (reference InterpreterCreateQuery — it never
     truncates); only a genuinely new CREATE clears the directory."""
+    from ..sources.engines import JoinTable, MemoryTable
+    from ..sources.mergetree import MergeTreeTable
+
     if re.search(r"(?i)\sALIAS\s", text):
         text = _extract_alias_columns(text, tables)
     ine = re.match(r"(?i)^CREATE\s+TABLE\s+IF\s+NOT\s+EXISTS\s+"
@@ -13749,25 +13683,16 @@ def _create_table_statement(spark, text: str, tables, sample_by=None):
                 t0 = create_table_sql(
                     spark, text[:close0 + 1] + " " + am0.group(1),
                     _default_table_dir(), tables)
-                if tables is not None:
-                    tables[nm0] = t0
-                decl0 = ([f.name for f in spark.createDataFrame(
-                    [], t0.schema_ddl).schema.fields]
-                    if getattr(t0, "schema_ddl", None) else [])
-                if len(decl0) == len(df0.columns):
-                    df0 = df0.toDF(*decl0)
-                return _append_to_table(spark, nm0, df0, tables)
-            decl_m = [c.strip().split(None, 1)[0].strip("`")
-                      for c in _split_top_commas(
-                          text[cm0.end():close0])
-                      if c.strip() and not re.match(
-                          r"(?i)\s*(PROJECTION|INDEX|CONSTRAINT|"
-                          r"PRIMARY\s+KEY)\b", c)]
-            if len(decl_m) == len(df0.columns):
-                df0 = df0.toDF(*decl_m)
-            df0.localCheckpoint(eager=True) \
-                .createOrReplaceTempView(nm0)
-            return None
+            else:
+                t0 = MemoryTable(spark, _parse_column_decls(
+                    text[cm0.end():close0]))
+            if tables is not None:
+                tables[nm0] = t0
+            decl0 = t0.decls.columns
+            if len(decl0) == len(df0.columns):
+                df0 = df0.toDF(*decl0)
+            return _append_to_table(
+                spark, nm0, df0, {nm0: t0} if tables is None else tables)
     m = _CTAS_RE.match(text)
     if m:
         name, engine_raw, engine_args, _mid, select = m.groups()
@@ -13832,8 +13757,8 @@ def _create_table_statement(spark, text: str, tables, sample_by=None):
                              tables)
         if tables is not None:
             tables[name] = t
-        if getattr(t, "schema_ddl", None):
-            empty = spark.createDataFrame([], t.schema_ddl)
+        if t.decls.schema_ddl:
+            empty = spark.createDataFrame([], t.decls.schema_ddl)
             empty.createOrReplaceTempView(name)
             # Validate the engine's FINAL rewrite NOW: an invalid
             # sort-key expression must fail the CREATE (the reference
@@ -13865,20 +13790,19 @@ def _create_table_statement(spark, text: str, tables, sample_by=None):
                 spark, cl.group(1), local, tables):
             return None
         srct = (tables or {}).get(cl.group(2))
-        if srct is not None and getattr(srct, "ch_decl_cols", None) \
-                and hasattr(srct, "_apply_engine"):
+        if isinstance(srct, MergeTreeTable) and srct.decls.decl_texts:
             # managed source: clone as a managed table from the
             # DECLARED columns so type metadata (Object columns,
             # defaults, codecs) carries over (golden
             # 01825_type_json_insert_select)
             synth = (f"CREATE TABLE {cl.group(1)} "
-                     f"({', '.join(srct.ch_decl_cols)}) "
+                     f"({', '.join(srct.decls.decl_texts)}) "
                      f"ENGINE = MergeTree ORDER BY tuple()")
             t0 = create_table_sql(spark, synth, _default_table_dir(),
                                   tables)
             if tables is not None:
                 tables[cl.group(1)] = t0
-            spark.createDataFrame([], t0.schema_ddl) \
+            spark.createDataFrame([], t0.decls.schema_ddl) \
                 .createOrReplaceTempView(cl.group(1))
             return None
         src = _resolve_view_safe(spark, cl.group(2), srct)
@@ -13887,7 +13811,7 @@ def _create_table_statement(spark, text: str, tables, sample_by=None):
                 .createOrReplaceTempView(cl.group(1))
             return None
 
-    # non-MergeTree engine with explicit columns: empty typed view
+    # non-MergeTree engine with explicit columns: a MemoryTable
     if cm:
         if cm.group(3).lower() == "distributed":
             if re.search(r"(?im)^\s*INDEX\s+\w+", cm.group(2)) or \
@@ -13907,9 +13831,7 @@ def _create_table_statement(spark, text: str, tables, sample_by=None):
             # StorageEmbeddedRocksDB requires PRIMARY KEY with exactly
             # one column, and it must be a declared column
             # (reference src/Storages/RocksDB/StorageEmbeddedRocksDB.cpp)
-            declared = {c.strip().split(None, 1)[0].strip("`")
-                        for c in _split_top_commas(cm.group(2))
-                        if c.strip()}
+            declared = set(_parse_column_decls(cm.group(2)).columns)
             pk = re.search(r"(?is)\bPRIMARY\s+KEY\s*\(?\s*"
                            r"([^)(;]+?)\s*\)?\s*$",
                            cm.group(5) or "")
@@ -13939,83 +13861,33 @@ def _create_table_statement(spark, text: str, tables, sample_by=None):
             t.always_final = True
             if tables is not None:
                 tables[name] = t
-            if getattr(t, "schema_ddl", None):
-                spark.createDataFrame([], t.schema_ddl) \
+            if t.decls.schema_ddl:
+                spark.createDataFrame([], t.decls.schema_ddl) \
                     .createOrReplaceTempView(name)
             return None
-        parts = []
-        decl_nullable: set = set()
-        decl_json: set = set()
-        decl_obj: set = set()
-        decl_dynamic: set = set()
-        decl_defaults: dict = {}
-        for coldef in _split_top_commas(cm.group(2)):
-            if re.match(r"(?i)\s*(PROJECTION|INDEX|CONSTRAINT|"
-                        r"PRIMARY\s+KEY)\b", coldef):
-                continue
-            toks = coldef.strip().split(None, 1)
-            if len(toks) < 2:
-                continue
-            if re.match(r"(?i)\s*Nullable\s*\(", _decl_type(toks[1])):
-                decl_nullable.add(toks[0].strip("`"))
-            if re.match(r"(?i)\s*Object\s*\(", _decl_type(toks[1])):
-                decl_obj.add(toks[0].strip("`"))
-            elif re.match(r"(?i)\s*JSON\b", _decl_type(toks[1])):
-                decl_json.add(toks[0].strip("`"))
-            if re.match(r"(?i)\s*Dynamic\b", _decl_type(toks[1])):
-                decl_dynamic.add(toks[0].strip("`"))
-            dm0 = re.search(r"(?i)\b(DEFAULT|MATERIALIZED)\s+(.+?)"
-                            r"(?:\s+(?:CODEC|TTL|COMMENT)\b.*)?$",
-                            toks[1].strip())
-            if dm0:
-                decl_defaults[toks[0].strip("`")] = \
-                    _translate_expr(dm0.group(2).strip())
-            nm2 = re.match(r"(?is)^Nested\s*\((.*)\)\s*$",
-                           toks[1].strip())
-            if nm2:
-                # Nested(a T, ...) expands to sibling array columns
-                for sub in _split_top_commas(nm2.group(1)):
-                    st = sub.strip().split(None, 1)
-                    if len(st) != 2:
-                        continue
-                    parts.append(
-                        f"`{toks[0].strip('`')}.{st[0].strip('`')}` "
-                        f"ARRAY<{_ch_decl_type_to_spark(_decl_type(st[1]))}>")
-                continue
-            parts.append(f"`{toks[0].strip('`')}` "
-                         f"{_ch_decl_type_to_spark(_decl_type(toks[1]))}")
-        ddl = ", ".join(parts)
         # ENGINE = Join(strictness, kind, keys...) gets a managed
         # JoinTable so joinGet()/session joins replay the stored side
-        # (reference src/Storages/StorageJoin.cpp)
+        # (reference src/Storages/StorageJoin.cpp); every other engine
+        # keeps its rows in a MemoryTable (StorageMemory)
+        t = MemoryTable(spark)
         if cm.group(3).lower() == "join" and cm.group(4):
-            from ..sources.engines import JoinTable
             eargs = [x.strip().strip("'\"`")
                      for x in cm.group(4).split(",")]
             if len(eargs) >= 3:
                 import os as _os
+                import shutil as _shutil
                 t = JoinTable(spark,
                               _unused_table_dir(_os.path.join(
                                   _default_table_dir(), name), name, tables),
                               key_cols=eargs[2:],
                               strictness=eargs[0].lower(),
                               kind=eargs[1].lower())
-                import shutil as _shutil
                 _shutil.rmtree(t.path, ignore_errors=True)
-                t.schema_ddl = ddl
-                if tables is not None:
-                    tables[name] = t
-        spark.createDataFrame([], ddl).createOrReplaceTempView(name)
+        t.decls = _parse_column_decls(cm.group(2))
         if tables is not None:
-            # declaration record for view-backed (Memory-analog)
-            # tables: INSERT fills NULLs/missing columns from DEFAULT
-            # expressions or type defaults
-            # (input_format_null_as_default)
-            tables.setdefault("__decl__", {})[name] = {
-                "nullable": decl_nullable, "defaults": decl_defaults,
-                "json": decl_json, "dynamic": decl_dynamic,
-                "obj": decl_obj, "decl_text": cm.group(2),
-                "columns": set(re.findall(r"`([^`]+)`", ddl))}
+            tables[name] = t
+        spark.createDataFrame([], t.decls.schema_ddl) \
+            .createOrReplaceTempView(name)
         return None
     # column-less Merge engine: CREATE TABLE m ENGINE = Merge(db,
     # 'regex') — a union view over the matching session tables
@@ -14101,12 +13973,21 @@ def _alter_table_statement(spark, name: str, body: str, tables):
     """ALTER TABLE column operations (reference
     src/Parsers/ParserAlterQuery.cpp / InterpreterAlterQuery): ADD /
     DROP / RENAME / MODIFY / MATERIALIZE / CLEAR COLUMN, COMMENT,
-    MODIFY TTL/SETTING.  Managed MergeTree tables evolve their declared
-    schema (old parts are aligned at read time — missing columns fill
-    with the DEFAULT, the reference's non-mutating ADD semantics);
-    Memory/view tables transform the registered DataFrame."""
+    MODIFY TTL/SETTING.  Every table's declared columns (``decls``)
+    evolve with it.  Managed MergeTree tables keep their parts (old
+    parts are aligned at read time — missing columns fill with the
+    DEFAULT, the reference's non-mutating ADD semantics); a
+    MemoryTable stores the transformed rows; an undeclared view is
+    replaced by the transformed frame.  Partition, part and
+    materializing ops need a MergeTree table."""
+    from ..sources.engines import MemoryTable
+    from ..sources.mergetree import MergeTreeTable
+
     t = (tables or {}).get(name)
-    df = _resolve_view_safe(spark, name, t)
+    mt = isinstance(t, MergeTreeTable)
+    decls = _decls(t)
+    df = (t.read_raw() if isinstance(t, MemoryTable)
+          else _resolve_view_safe(spark, name, t))
     if df is None:
         raise ValueError(f"ALTER: unknown table {name!r}")
     # list-valued ops (`DROP STATISTICS a, b` / `ADD STATISTICS b
@@ -14125,8 +14006,8 @@ def _alter_table_statement(spark, name: str, body: str, tables):
             continue
         ops.append(o)
     for op in ops:
-        if df is None:                # an earlier op rewrote the parts
-            df = t.read()
+        if df is None:                # an earlier op rewrote the rows
+            df = t.read_raw() if isinstance(t, MemoryTable) else t.read()
         o = op.strip()
         m = re.match(r"(?is)^(ADD|DROP|MODIFY|CLEAR|MATERIALIZE)\s+"
                      r"STATISTICS?\s+(?:IF\s+(?:NOT\s+)?EXISTS\s+)?"
@@ -14137,15 +14018,13 @@ def _alter_table_statement(spark, name: str, body: str, tables):
                       for c in m.group(2).split(",") if c.strip()]
             kinds = [k.strip() for k in (m.group(3) or "").split(",")
                      if k.strip()]
-            stats = getattr(t, "ch_col_stats", None)
-            if stats is None and t is not None:
-                stats = t.ch_col_stats = {}
+            stats = decls.stats
             decl_by_name = {}
-            for dtext in getattr(t, "ch_decl_cols", None) or ():
+            for dtext in decls.decl_texts:
                 dm9 = re.match(r"`?(\w+)`?\s+(.*)$", dtext.strip())
                 if dm9:
                     decl_by_name[dm9.group(1)] = dm9.group(2)
-            if verb in ("ADD", "MODIFY") and stats is not None:
+            if verb in ("ADD", "MODIFY"):
                 for cn in cnames:
                     _validate_stat_types(
                         kinds, decl_by_name.get(cn, "Int64"))
@@ -14153,7 +14032,7 @@ def _alter_table_statement(spark, name: str, body: str, tables):
                         else set(stats.get(cn, ()))
                     cur2 |= {k.lower() for k in kinds}
                     stats[cn] = sorted(cur2, key=_STAT_TYPES.index)
-            elif verb == "DROP" and stats is not None:
+            elif verb == "DROP":
                 for cn in cnames:
                     stats.pop(cn, None)
             # CLEAR / MATERIALIZE: data-side no-ops here
@@ -14171,11 +14050,10 @@ def _alter_table_statement(spark, name: str, body: str, tables):
                      else _ch_type_default_sql(dt))
             if cname not in df.columns:
                 df = df.withColumn(cname, F.expr(dexpr).cast(dt))
-            if t is not None:
-                if getattr(t, "schema_ddl", None):
-                    t.schema_ddl += f", `{cname}` {stype}"
-                if dm:
-                    t.column_defaults[cname] = dexpr
+            if decls.schema_ddl:
+                decls.schema_ddl += f", `{cname}` {stype}"
+            if dm:
+                decls.defaults[cname] = dexpr
             continue
         m = re.match(r"(?is)^DROP\s+COLUMN\s+(IF\s+EXISTS\s+)?"
                      r"`?([\w.]+)`?$", o)
@@ -14208,13 +14086,11 @@ def _alter_table_statement(spark, name: str, body: str, tables):
                 # `base.sub` member columns (NestedUtils; 02500)
                 for mc in members:
                     df = df.drop(mc)
-                if t is not None and getattr(t, "schema_ddl", None):
-                    t.schema_ddl = ", ".join(
-                        c for c in _split_top_commas(t.schema_ddl)
-                        if not c.strip().split()[0].strip("`")
-                        .startswith(f"{cname}."))
-                    for mc in members:
-                        t.column_defaults.pop(mc, None)
+                    decls.defaults.pop(mc, None)
+                decls.schema_ddl = ", ".join(
+                    c for c in _split_top_commas(decls.schema_ddl)
+                    if not c.strip().split()[0].strip("`")
+                    .startswith(f"{cname}."))
                 continue
             if cname not in df.columns and not m.group(1):
                 # the reference rejects dropping an unknown column
@@ -14223,49 +14099,43 @@ def _alter_table_statement(spark, name: str, body: str, tables):
                     f"ALTER DROP COLUMN: no column {cname!r} in "
                     f"{name!r} (reference NOT_FOUND_COLUMN)")
             df = df.drop(cname)
-            if t is not None and getattr(t, "schema_ddl", None):
-                t.schema_ddl = ", ".join(
-                    c for c in _split_top_commas(t.schema_ddl)
-                    if c.strip().split()[0].strip("`") != cname)
-                t.column_defaults.pop(cname, None)
+            decls.schema_ddl = ", ".join(
+                c for c in _split_top_commas(decls.schema_ddl)
+                if c.strip().split()[0].strip("`") != cname)
+            decls.defaults.pop(cname, None)
             continue
         m = re.match(r"(?is)^RENAME\s+COLUMN\s+(?:IF\s+EXISTS\s+)?"
                      r"`?([\w.]+)`?\s+TO\s+`?([\w.]+)`?$", o)
         if m:
             df = df.withColumnRenamed(m.group(1), m.group(2))
-            if t is not None and getattr(t, "schema_ddl", None):
-                t.schema_ddl = re.sub(
-                    rf"`?{re.escape(m.group(1))}`?(\s)",
-                    rf"`{m.group(2)}`\1", t.schema_ddl, count=1)
+            decls.schema_ddl = re.sub(
+                rf"`?{re.escape(m.group(1))}`?(\s)",
+                rf"`{m.group(2)}`\1", decls.schema_ddl, count=1)
             continue
         m = re.match(r"(?is)^MODIFY\s+COLUMN\s+(?:IF\s+EXISTS\s+)?"
                      r"`?([\w.]+)`?\s+(.+)$", o)
         if m:
             cname, rest = m.group(1), m.group(2)
             ccm2 = re.search(r"(?i)\bCODEC\s*\(", rest)
-            if ccm2 and t is not None:
+            if ccm2:
                 copen = rest.index("(", ccm2.start())
                 cend2 = _matching_paren(rest, copen)
                 if cend2 > 0:
                     ctype2 = rest[:ccm2.start()].strip()
                     if not ctype2:
-                        for dtext2 in getattr(t, "ch_decl_cols",
-                                              None) or ():
+                        for dtext2 in decls.decl_texts:
                             nm8 = re.match(r"`?(\w+)`?\s+(.*)", dtext2)
                             if nm8 and nm8.group(1) == cname:
                                 ctype2 = nm8.group(2)
                                 break
-                    if not hasattr(t, "ch_col_codecs"):
-                        t.ch_col_codecs = {}
-                    t.ch_col_codecs[cname] = _canon_codec_text(
+                    decls.codecs[cname] = _canon_codec_text(
                         rest[copen + 1:cend2], ctype2)
                     rest = (rest[:ccm2.start()]
                             + rest[cend2 + 1:]).strip()
                     if not rest:
                         continue
-            if t is not None and re.match(r"(?i)^JSON\b", rest) \
-                    and cname in (getattr(t, "obj_cols", None)
-                                  or ()):
+            if re.match(r"(?i)^JSON\b", rest) and cname in decls.obj \
+                    and isinstance(t, (MergeTreeTable, MemoryTable)):
                 # Object('json') -> JSON migration: the finalized
                 # tuple MATERIALIZES into the stored strings (path
                 # defaults included — golden 03270 keeps the 0 fills)
@@ -14273,47 +14143,27 @@ def _alter_table_statement(spark, name: str, body: str, tables):
                 mat = t.read().withColumn(
                     cname, F.to_json(F.col(f"`{cname}`"))) \
                     .localCheckpoint(eager=True)
-                t._drop_parts(t.parts())
-                t.obj_cols.discard(cname)
-                getattr(t, "obj_trees", {}).pop(cname, None)
-                getattr(t, "obj_ch_types", {}).pop(cname, None)
-                t.json_cols.add(cname)
+                t.truncate()
+                decls.obj.discard(cname)
+                decls.json.add(cname)
                 t.insert(mat)
                 df = None
                 continue
-            _rec8 = ((tables or {}).get("__decl__") or {}).get(name)
-            if t is None and _rec8 and re.match(r"(?i)^JSON\b", rest) \
-                    and cname in (_rec8.get("obj") or ()):
-                # Memory-engine Object -> JSON migration (same
-                # contract as the MergeTree path)
-                mat8 = spark.table(name).withColumn(
-                    cname, F.to_json(F.col(f"`{cname}`"))) \
-                    .localCheckpoint(eager=True)
-                _rec8["obj"].discard(cname)
-                _rec8.setdefault("json", set()).add(cname)
-                (_rec8.get("obj_trees") or {}).pop(cname, None)
-                (_rec8.get("obj_ch_types") or {}).pop(cname, None)
-                if tables is not None:
-                    tables.setdefault("__viewraw__", {})[name] = mat8
-                mat8.createOrReplaceTempView(name)
-                df = mat8
-                continue
             if re.match(r"(?is)^(DEFAULT|MATERIALIZED)\b", rest):
-                if t is not None:
-                    t.column_defaults[cname] = _translate_expr(
-                        re.sub(r"(?is)^(DEFAULT|MATERIALIZED)\s+", "",
-                               rest).strip())
+                decls.defaults[cname] = _translate_expr(
+                    re.sub(r"(?is)^(DEFAULT|MATERIALIZED)\s+", "",
+                           rest).strip())
                 continue
             if re.match(r"(?is)^(REMOVE|COMMENT|TTL|SETTINGS)\b", rest):
                 continue
             mm2 = re.search(r"(?i)\b(DEFAULT|MATERIALIZED)\s+(.+?)"
                             r"(?:\s+(?:CODEC|TTL|COMMENT)\b.*)?$",
                             rest)
-            if mm2 and t is not None:
-                t.column_defaults[cname] = _translate_expr(
+            if mm2:
+                decls.defaults[cname] = _translate_expr(
                     mm2.group(2).strip())
                 if mm2.group(1).upper() == "MATERIALIZED":
-                    getattr(t, "materialized_cols", set()).add(cname)
+                    decls.materialized.add(cname)
                 rest = rest[:mm2.start()].strip()
             stype = _ch_decl_type_to_spark(_decl_type(rest))
             dt = _spark_type_of_ddl(spark, stype)
@@ -14339,18 +14189,17 @@ def _alter_table_statement(spark, name: str, body: str, tables):
                 else:
                     df = df.withColumn(cname,
                                        F.col(f"`{cname}`").cast(dt))
-            if t is not None and getattr(t, "schema_ddl", None):
-                t.schema_ddl = ", ".join(
-                    (f"`{cname}` {stype}"
-                     if c.strip().split()[0].strip("`") == cname else c)
-                    for c in _split_top_commas(t.schema_ddl))
+            decls.schema_ddl = ", ".join(
+                (f"`{cname}` {stype}"
+                 if c.strip().split()[0].strip("`") == cname else c)
+                for c in _split_top_commas(decls.schema_ddl))
             continue
         m = re.match(r"(?is)^(REPLACE|ATTACH)\s+PARTITION\s+"
                      r"(?:ID\s+)?('[^']*'|[\w.-]+)\s+FROM\s+"
                      r"`?(\w+)`?$", o)
         if m:
             src = (tables or {}).get(m.group(3))
-            if t is None or src is None:
+            if not mt or not isinstance(src, MergeTreeTable):
                 raise ValueError(f"ALTER {m.group(1).upper()} "
                                  f"PARTITION needs managed tables")
             val = m.group(2).strip("'")
@@ -14363,7 +14212,7 @@ def _alter_table_statement(spark, name: str, body: str, tables):
         m = re.match(r"(?is)^(DETACH|ATTACH)\s+(PART|PARTITION)\s+"
                      r"(?:ID\s+)?('[^']*'|[\w.-]+)$", o)
         if m:
-            if t is None:
+            if not mt:
                 raise ValueError(f"ALTER {m.group(1).upper()} "
                                  f"{m.group(2).upper()} needs a "
                                  f"managed table")
@@ -14376,7 +14225,7 @@ def _alter_table_statement(spark, name: str, body: str, tables):
                      r"('[^']*'|[\w.-]+)\s+TO\s+TABLE\s+`?(\w+)`?$", o)
         if m:
             dst = (tables or {}).get(m.group(2))
-            if t is None or dst is None:
+            if not mt or not isinstance(dst, MergeTreeTable):
                 raise ValueError("ALTER MOVE PARTITION needs managed "
                                  "tables")
             t.move_partition_to(dst, m.group(1).strip("'"))
@@ -14386,7 +14235,7 @@ def _alter_table_statement(spark, name: str, body: str, tables):
         m = re.match(r"(?is)^DROP\s+(?:PARTITION|PART)\s+(?:ID\s+)?"
                      r"('[^']*'|[\w.-]+)$", o)
         if m:
-            if t is None:
+            if not mt:
                 raise ValueError("ALTER DROP PARTITION needs a "
                                  "managed table")
             t.drop_partition(m.group(1).strip("'"))
@@ -14394,32 +14243,27 @@ def _alter_table_statement(spark, name: str, body: str, tables):
             continue
         m = re.match(r"(?is)^MATERIALIZE\s+COLUMN\s+`?([\w.]+)`?$",
                      o)
-        if m and t is not None \
-                and m.group(1) in getattr(t, "materialized_cols",
-                                          set()) \
-                and m.group(1) in t.column_defaults \
-                and hasattr(t, "update_where"):
+        if m and mt and m.group(1) in decls.materialized \
+                and m.group(1) in decls.defaults:
             # MATERIALIZED-expression columns REWRITE existing parts
             # with the current expression (MutationsInterpreter
             # materialize-column; plain DEFAULT columns never
             # override stored values)
             t.update_where(
                 F.lit(True),
-                {m.group(1): F.expr(t.column_defaults[m.group(1)])})
+                {m.group(1): F.expr(decls.defaults[m.group(1)])})
             df = None
             continue
         m = re.match(r"(?is)^ADD\s+PROJECTION\s+(?:IF\s+NOT\s+"
                      r"EXISTS\s+)?`?(\w+)`?", o)
         if m:
-            if t is not None:
-                if not hasattr(t, "sql_projections"):
-                    t.sql_projections = set()
+            if mt:
                 t.sql_projections.add(m.group(1))
             continue
         m = re.match(r"(?is)^DROP\s+PROJECTION\s+(IF\s+EXISTS\s+)?"
                      r"`?(\w+)`?$", o)
         if m:
-            known = m.group(2) in getattr(t, "sql_projections", set())
+            known = mt and m.group(2) in t.sql_projections
             if not known and not m.group(1):
                 raise ValueError(
                     f"DROP PROJECTION: unknown projection "
@@ -14431,7 +14275,7 @@ def _alter_table_statement(spark, name: str, body: str, tables):
                      r"`?([\w.]+)`?"
                      r"(?:\s+IN\s+PARTITION\s+(?:ID\s+)?"
                      r"('[^']*'|[\w.-]+))?\s*$", o)
-        if m and t is not None and hasattr(t, "update_where"):
+        if m and mt:
             # CLEAR COLUMN keeps the column and refills it with the
             # declared/type DEFAULT per partition (reference
             # src/Interpreters/MutationsInterpreter.h:44 — golden
@@ -14446,7 +14290,7 @@ def _alter_table_statement(spark, name: str, body: str, tables):
             except ValueError:
                 cur = {}
             if cname in cur:
-                dflt_sql = (t.column_defaults or {}).get(cname) \
+                dflt_sql = decls.defaults.get(cname) \
                     or _ch_type_default_sql(cur[cname])
                 expr = F.expr(dflt_sql).cast(cur[cname])
                 if m.group(2) is not None:
@@ -14470,8 +14314,12 @@ def _alter_table_statement(spark, name: str, body: str, tables):
             continue
         raise NotImplementedError(f"ALTER operation not mapped: "
                                   f"{o[:60]!r}")
-    if hasattr(t, "read_views"):
+    if mt:
         _register_table_views(spark, name, t, tables, plain=df)
+    elif isinstance(t, MemoryTable):
+        if df is not None:            # else the last op stored the rows
+            t.replace(df)
+        _register_table_views(spark, name, t, tables)
     else:
         df.createOrReplaceTempView(name)
         _refresh_alias_views(spark, name, tables)
@@ -14486,9 +14334,8 @@ def _resolve_view_safe(spark, name: str, t):
     except Exception:
         pass
     if t is not None:
-        ddl = getattr(t, "schema_ddl", None)
-        if ddl:
-            return spark.createDataFrame([], ddl)
+        if _decls(t).schema_ddl:
+            return spark.createDataFrame([], _decls(t).schema_ddl)
         try:
             return t.read()
         except Exception:
@@ -14532,14 +14379,13 @@ def _register_table_views(spark, name: str, t, tables=None,
         # the table readable as empty — an empty view typed by the
         # declared DDL, else by the old view
         try:
-            raw = spark.createDataFrame([], t.schema_ddl)
+            raw = (spark.createDataFrame([], t.decls.schema_ddl)
+                   if t.decls.schema_ddl else spark.table(name).limit(0)
+                   .localCheckpoint(eager=True))
         except Exception:
-            try:
-                raw = spark.table(name).limit(0).localCheckpoint(eager=True)
-            except Exception:
-                return
+            return
         final = raw
-    if getattr(t, "always_final", False):
+    if t.always_final:
         raw = final
     (raw if plain is None else plain).createOrReplaceTempView(name)
     final.createOrReplaceTempView(f"{name}__final")
@@ -14551,10 +14397,10 @@ def _target_schema(spark, name: str, t):
     ALTER ADD/DROP COLUMN even when existing parts predate the change,
     00446 golden), then the part files, then the registered view."""
     if t is not None and hasattr(t, "read"):
-        ddl = getattr(t, "schema_ddl", None)
-        if ddl:
+        if _decls(t).schema_ddl:
             try:
-                return spark.createDataFrame([], ddl).schema
+                return spark.createDataFrame(
+                    [], _decls(t).schema_ddl).schema
             except Exception:
                 pass
         try:
@@ -14569,8 +14415,8 @@ def _target_schema(spark, name: str, t):
 
 def _append_to_table(spark, name: str, df, tables, _mv_depth: int = 0):
     """Append ``df`` (already aligned by column NAME, possibly a
-    subset) to a managed MergeTreeTable or a registered temp view
-    (Memory-engine analog): casts to the target schema, fills missing
+    subset) to a session table (MergeTree, Memory, Join) or an
+    undeclared temp view: casts to the target schema, fills missing
     columns with DEFAULT expressions or CH type defaults, re-registers
     the view (reference InterpreterInsertQuery.h).  ``_mv_depth``
     threads the materialized-view cascade depth so cyclic MV TO
@@ -14591,36 +14437,19 @@ def _append_to_table(spark, name: str, df, tables, _mv_depth: int = 0):
             return None
         raise ValueError(f"INSERT: unknown table {name!r}")
     have = set(df.columns)
-    defaults = getattr(t, "column_defaults", None) or {}
-    tz_map = getattr(t, "col_timezones", None) or {}
+    decls = _decls(t)
+    defaults, tz_map = decls.defaults, decls.timezones
     in_types = {f.name: f.dataType.simpleString()
                 for f in df.schema.fields}
     out = []
-    nullable_decl = getattr(t, "nullable_cols", None)
-    if t is None and tables:
-        # view-backed (Memory-analog) table: the CREATE recorded
-        # declared nullability + DEFAULT expressions — NULLs into
-        # non-Nullable columns take the DEFAULT or the type default
-        # (input_format_null_as_default)
-        decl = (tables.get("__decl__") or {}).get(name)
-        if decl is not None:
-            if nullable_decl is None:
-                nullable_decl = decl["nullable"]
-            if not defaults:
-                defaults = decl["defaults"]
-    json_set = (getattr(t, "json_cols", None)
-                or ((tables.get("__decl__") or {}).get(name) or {})
-                .get("json", set()) if tables else set()) or set()
+    # a table declared with a column list: NULLs into non-Nullable
+    # columns take the DEFAULT or the type default
+    # (input_format_null_as_default); Dynamic columns hold NULL
+    # natively (the dynamic type set includes Null)
+    nullable_decl = (decls.nullable | decls.dynamic
+                     if decls.schema_ddl else None)
     # Object('json') columns store the compacted string carrier too
-    json_set = set(json_set) | set(getattr(t, "obj_cols", None)
-                                   or ())
-    # Dynamic columns hold NULL natively (the dynamic type set
-    # includes Null) — never default-fill them
-    dyn_set = (getattr(t, "dynamic_cols", None)
-               or ((tables.get("__decl__") or {}).get(name) or {})
-               .get("dynamic", set()) if tables else set()) or set()
-    if nullable_decl is not None and dyn_set:
-        nullable_decl = set(nullable_decl) | set(dyn_set)
+    json_set = decls.json | decls.obj
     for f in schema.fields:
         if f.name in have:
             # backticks make dotted column NAMES (`n.a`) resolve
@@ -14668,44 +14497,25 @@ def _append_to_table(spark, name: str, df, tables, _mv_depth: int = 0):
                        .alias(f.name))
     aligned = df.select(*out)
     if t is not None and hasattr(t, "insert"):
-        _check_object_insert_compat(t, aligned)
+        _check_object_insert_compat(decls, aligned)
         t.insert(aligned)
         _register_table_views(spark, name, t, tables)
     else:
-        decl_rec = ((tables or {}).get("__decl__") or {}).get(name) \
-            or {}
-        raw_store = (tables.setdefault("__viewraw__", {})
-                     if tables is not None else None)
-        base = (raw_store or {}).get(name)
-        if base is None:
-            base = spark.table(name)
-        new_raw = base.unionByName(aligned) \
-            .localCheckpoint(eager=True)
-        if raw_store is not None:
-            raw_store[name] = new_raw
-        view_df = new_raw
-        if decl_rec.get("obj"):
-            # Memory-engine Object('json') columns finalize on the
-            # registered view (same contract as the MergeTree path)
-            from ..sources.mergetree import finalize_object_columns
-            chm = decl_rec.setdefault("obj_ch_types", {})
-            view_df = finalize_object_columns(
-                new_raw, decl_rec["obj"], (), chm,
-                decl_rec.setdefault("obj_trees", {}))
-        view_df.createOrReplaceTempView(name)
+        # undeclared view: the registered frame is the only store
+        spark.table(name).unionByName(aligned) \
+            .localCheckpoint(eager=True).createOrReplaceTempView(name)
     _fire_mv_triggers(spark, name, aligned, tables, depth=_mv_depth)
     return None
 
 
-def _check_object_insert_compat(t, aligned) -> None:
+def _check_object_insert_compat(decls, aligned) -> None:
     """Object('json') path-type evolution contract (DataTypeObject
     unification): SCALAR paths may widen/decay across inserts, but a
     container-kind change (object vs array) or a scalar-kind change
     INSIDE a Nested array rejects (reference INCOMPATIBLE_COLUMNS —
     goldens 01825_type_json_14 / _insert_select id=5)."""
-    objs = set(getattr(t, "obj_cols", None) or ()) \
-        | set(getattr(t, "obj_array_cols", None) or ())
-    trees = getattr(t, "obj_trees", None) or {}
+    objs = decls.obj | decls.obj_array
+    trees = decls.obj_trees
     if not objs or not trees:
         return
     from ..sources.rowformats import object_type_tree
@@ -14730,11 +14540,11 @@ def _check_object_insert_compat(t, aligned) -> None:
         if old is None or c not in aligned.columns:
             continue
         if isinstance(old, tuple) and old[0] == "array" \
-                and c in (getattr(t, "obj_array_cols", None) or ()):
+                and c in decls.obj_array:
             old = old[1]
         try:
             vals = [r[0] for r in aligned.select(f"`{c}`").collect()]
-            if c in (getattr(t, "obj_array_cols", None) or ()):
+            if c in decls.obj_array:
                 vals = [e for v in vals for e in (v or [])]
             new = object_type_tree(vals)
         except Exception:
@@ -14908,11 +14718,8 @@ def _insert_json_rows(spark, name: str, cols_raw, fmt: str, body,
     # missing/null fields fill with the column type default — the
     # reference's input_format_null_as_default + missing-field rule
     # applies to non-Nullable targets ONLY; declared Nullable columns
-    # keep NULL.  View-backed Memory tables have no table object, so
-    # their Nullable declarations live in tables['__decl__'].
-    nullable = set(getattr(t, "nullable_cols", None) or set())
-    nullable |= set((((tables or {}).get("__decl__") or {})
-                     .get(name) or {}).get("nullable") or set())
+    # keep NULL
+    nullable = _decls(t).nullable
     for f3 in schema.fields:
         if f3.name in df.columns and f3.name not in nullable:
             dflt = _ch_type_default_sql(f3.dataType)
@@ -14938,10 +14745,8 @@ def _insert_values_statement(spark, name: str, cols_raw, body, tables):
     names = [f.name for f in schema.fields]
     cols = ([c.strip().strip("`") for c in cols_raw.split(",")]
             if cols_raw and cols_raw.strip() else names)
-    if (getattr(t, "obj_cols", None)
-            or (((tables or {}).get("__decl__") or {}).get(name)
-                or {}).get("obj")) \
-            and re.search(r"(?i)::\s*Tuple\s*\(", body):
+    obj_cols = _decls(t).obj
+    if obj_cols and re.search(r"(?i)::\s*Tuple\s*\(", body):
         # a literal named-tuple cast inserted into an Object('json')
         # column becomes the equivalent JSON object (golden
         # 01825_type_json_field)
@@ -14970,10 +14775,7 @@ def _insert_values_statement(spark, name: str, cols_raw, body, tables):
 
         body = re.sub(r"\(([^()]*)\)\s*::\s*Tuple\s*\(([^()]*)\)",
                       _tuple_to_json, body)
-    if (getattr(t, "obj_cols", None)
-            or (((tables or {}).get("__decl__") or {}).get(name)
-                or {}).get("obj")) \
-            and re.search(r"(?i)\bmap\s*\(", body):
+    if obj_cols and re.search(r"(?i)\bmap\s*\(", body):
         # a literal map(...) into an Object('json') column is the
         # equivalent JSON object too (golden 01825_type_json_field)
         import json as _json1
@@ -15004,10 +14806,7 @@ def _insert_values_statement(spark, name: str, cols_raw, body, tables):
     # Dynamic columns carry as STRINGS — mixed-type VALUES tuples
     # ((42), ('str')) need per-element coercion or Spark's inline
     # table rejects the column
-    dyn = set(getattr(t, "dynamic_cols", None) or ())
-    if tables:
-        dyn |= set((((tables.get("__decl__") or {}).get(name) or {})
-                    .get("dynamic")) or ())
+    dyn = _decls(t).dynamic
     rows = []
     for tup in _split_value_tuples(body):
         elems = _split_top_commas(tup)

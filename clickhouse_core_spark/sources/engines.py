@@ -16,7 +16,10 @@ Spark-first mappings:
   flushes to the destination table when row/batch thresholds trip
   (the reference's min/max_rows flush rule); reads see buffer + base,
   like the reference's union read path.
-- **MemoryTable** — a cached DataFrame with append.
+- **MemoryTable** — the rows of a session table as one locally
+  checkpointed frame; insert, mutations, ALTER and TRUNCATE replace
+  it.  ch_sql keeps every table declared with a column list on a
+  non-MergeTree, non-Join engine in one.
 """
 
 from __future__ import annotations
@@ -24,8 +27,10 @@ from __future__ import annotations
 import os
 from typing import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from clickhouse_core_spark.sources.mergetree import ColumnDecls
 
 
 class SetTable:
@@ -75,6 +80,7 @@ class JoinTable:
         self.key_cols = list(key_cols)
         self.strictness = strictness
         self.kind = kind
+        self.decls = ColumnDecls()
 
     def insert(self, df: DataFrame) -> None:
         df.write.mode("append").parquet(self.path)
@@ -164,22 +170,56 @@ class BufferTable:
 
 
 class MemoryTable:
-    """ENGINE = Memory analog: cached appendable frame."""
+    """ENGINE = Memory analog (reference StorageMemory.cpp): the rows
+    live in the session as one locally checkpointed frame, so lineage
+    stays bounded however many inserts and mutations it has seen.
+    ``decls`` is the declared column list; a declared table reads
+    empty before its first insert, an undeclared one raises."""
 
-    def __init__(self, spark: SparkSession):
+    def __init__(self, spark: SparkSession,
+                 decls: ColumnDecls | None = None):
         self.spark = spark
+        self.decls = decls or ColumnDecls()
         self._df: DataFrame | None = None
 
     def insert(self, df: DataFrame) -> None:
-        self._df = df if self._df is None else self._df.unionByName(df)
-        self._df = self._df.cache()
+        df = self.decls.truncate_dt64(df)
+        self.replace(df if self._df is None
+                     else self._df.unionByName(df))
+
+    def replace(self, df: DataFrame) -> None:
+        """Store ``df`` as the table's rows (ALTER and mutations)."""
+        self._df = df.localCheckpoint(eager=True)
+
+    def read_raw(self) -> DataFrame:
+        """The stored rows; Object('json') columns stay strings."""
+        if self._df is not None:
+            return self._df
+        if not self.decls.schema_ddl:
+            raise ValueError("memory table is empty")
+        return self.spark.createDataFrame([], self.decls.schema_ddl)
 
     def read(self) -> DataFrame:
-        if self._df is None:
-            raise ValueError("memory table is empty")
-        return self._df
+        return self.decls.finalize_objects(self.read_raw())
 
     def truncate(self) -> None:
-        if self._df is not None:
-            self._df.unpersist()
         self._df = None
+        self.decls.obj_trees.clear()
+        self.decls.obj_ch_types.clear()
+
+    def delete_where(self, predicate: Column) -> None:
+        """Drop the rows where ``predicate`` is TRUE (NULL keeps)."""
+        if self._df is not None:
+            self.replace(self._df.filter(
+                ~F.coalesce(predicate, F.lit(False))))
+
+    def update_where(self, predicate: Column, assignments: dict) -> None:
+        """Set ``column -> expression`` on the rows where ``predicate``
+        is TRUE; each value casts to its column's type."""
+        if self._df is None:
+            return
+        cond = F.coalesce(predicate, F.lit(False))
+        self.replace(self._df.withColumns({
+            c: F.when(cond, e.cast(self._df.schema[c].dataType))
+            .otherwise(F.col(f"`{c}`"))
+            for c, e in assignments.items()}))

@@ -37,6 +37,7 @@ import json
 import os
 import re
 import time
+from dataclasses import dataclass, field
 from typing import Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -94,6 +95,64 @@ def _split_ddl_columns(ddl: str) -> list[str]:
             start = i + 1
     out.append(ddl[start:])
     return out
+
+
+@dataclass
+class ColumnDecls:
+    """The column list a table was declared with (reference
+    ColumnsDescription, src/Storages/ColumnsDescription.h).  MergeTree,
+    Join and Memory tables each own one; the frontend's CREATE TABLE
+    parser fills it and ALTER edits it.  A table made through the
+    Python API without a column list keeps the empty record."""
+
+    schema_ddl: str = ""                # Spark DDL of the stored columns
+    decl_texts: list = field(default_factory=list)   # "`c` <CH type>"
+    projections: list = field(default_factory=list)  # (name, SELECT)
+    nullable: set = field(default_factory=set)
+    # column -> Spark SQL DEFAULT / MATERIALIZED expression
+    defaults: dict = field(default_factory=dict)
+    materialized: set = field(default_factory=set)
+    json: set = field(default_factory=set)         # JSON string carrier
+    obj: set = field(default_factory=set)          # Object('json')
+    obj_array: set = field(default_factory=set)    # Array(Object(..))
+    obj_nullable: set = field(default_factory=set)  # Object(Nullable)
+    dynamic: set = field(default_factory=set)
+    timezones: dict = field(default_factory=dict)  # DateTime('tz')
+    dt64_scales: dict = field(default_factory=dict)  # DateTime64(p)
+    stats: dict = field(default_factory=dict)      # STATISTICS kinds
+    codecs: dict = field(default_factory=dict)     # canonical CODEC
+    # Object columns: the finalized tuple's type name and type tree,
+    # refreshed by every finalizing read
+    obj_ch_types: dict = field(default_factory=dict)
+    obj_trees: dict = field(default_factory=dict)
+
+    @property
+    def columns(self) -> list[str]:
+        return re.findall(r"`([^`]+)`", self.schema_ddl)
+
+    def truncate_dt64(self, df: DataFrame) -> DataFrame:
+        """Declared DateTime64(p) columns TRUNCATE inserted values to
+        their scale (DataTypeDateTime64 conversion; golden 02997 — a
+        DateTime64(0) column stores whole seconds)."""
+        for cname, p in self.dt64_scales.items():
+            if cname in df.columns and p < 6:
+                q = 10 ** (6 - p)
+                df = df.withColumn(
+                    cname, F.timestamp_micros(
+                        (F.floor(F.unix_micros(
+                            F.col(f"`{cname}`").cast("timestamp"))
+                            / q) * q).cast("long")))
+        return df
+
+    def finalize_objects(self, df: DataFrame) -> DataFrame:
+        """Deprecated ``Object('json')`` columns finalize to the
+        row-union named TUPLE on reads (reference DataTypeObject —
+        goldens 01825); see :func:`finalize_object_columns`."""
+        if not self.obj and not self.obj_array:
+            return df
+        return finalize_object_columns(
+            df, self.obj, self.obj_array, self.obj_ch_types,
+            self.obj_trees, nullable_cols=self.obj_nullable)
 
 
 class MergeTreeTable:
@@ -161,9 +220,20 @@ class MergeTreeTable:
         # (JSON-persistable); INSERT adds missing columns and fills
         # NULLs from the expression (which may reference other
         # inserted columns, the materialized-default contract)
-        self.column_defaults = dict(column_defaults or {})
+        self.decls = ColumnDecls(defaults=dict(column_defaults or {}))
+        # storage facts set by CREATE TABLE: the SAMPLE BY expression,
+        # FINAL on every read (EmbeddedRocksDB key-value semantics),
+        # the projections ALTER ADD PROJECTION declared
+        self.sample_by_expr: str | None = None
+        self.always_final = False
+        self.sql_projections: set = set()
         os.makedirs(path, exist_ok=True)
         self._write_meta()
+
+    @property
+    def column_defaults(self) -> dict:
+        """The declared DEFAULT expressions (``decls.defaults``)."""
+        return self.decls.defaults
 
     # ------------------------------------------------------------- metadata
 
@@ -207,6 +277,14 @@ class MergeTreeTable:
             os.path.join(self.path, d) for d in os.listdir(self.path)
             if d.startswith("part-") and os.path.isdir(os.path.join(self.path, d)))
 
+    def truncate(self) -> None:
+        """TRUNCATE TABLE: drop every part.  An emptied Object('json')
+        column resets its unified type (the next insert starts
+        fresh)."""
+        self._drop_parts(self.parts())
+        self.decls.obj_trees.clear()
+        self.decls.obj_ch_types.clear()
+
     def insert(self, df: DataFrame,
                write_options: dict | None = None,
                part_name: str | None = None) -> str:
@@ -220,19 +298,8 @@ class MergeTreeTable:
         source part's place in the part order)."""
         part_dir = os.path.join(
             self.path, part_name or f"part-{int(time.time() * 1e6):016x}")
-        # declared DateTime64(p) columns TRUNCATE inserted values to
-        # their scale (DataTypeDateTime64 conversion; golden 02997 —
-        # a DateTime64(0) column stores whole seconds)
-        for cname, p in (getattr(self, "dt64_scales", None)
-                         or {}).items():
-            if cname in df.columns and p < 6:
-                q = 10 ** (6 - p)
-                df = df.withColumn(
-                    cname, F.timestamp_micros(
-                        (F.floor(F.unix_micros(
-                            F.col(f"`{cname}`").cast("timestamp"))
-                            / q) * q).cast("long")))
-        nullable = getattr(self, "nullable_cols", frozenset())
+        df = self.decls.truncate_dt64(df)
+        nullable = self.decls.nullable
         for name, expr_sql in self.column_defaults.items():
             if name not in df.columns:
                 df = df.withColumn(name, F.expr(expr_sql))
@@ -604,13 +671,13 @@ class MergeTreeTable:
                 df = df.unionByName(d, allowMissingColumns=True)
         fields = {f.name: f for f in df.schema.fields}
         names = list(fields)
-        ddl = getattr(self, "schema_ddl", None)
-        if ddl:
-            df, names = self._fill_declared(df, ddl, fields)
+        if self.decls.schema_ddl:
+            df, names = self._fill_declared(df, self.decls.schema_ddl,
+                                            fields)
         # declared DateTime64(p) columns carry their scale as field
         # metadata so renderers print EXACTLY p fractional digits
         # (golden 02997; metadata survives SELECT * projections)
-        scales = getattr(self, "dt64_scales", None) or {}
+        scales = self.decls.dt64_scales
         if names != list(fields) or scales:
             df = df.select(*[
                 (F.col(f"`{c}`").alias(c, metadata={
@@ -640,8 +707,8 @@ class MergeTreeTable:
             toks = c.strip().split(None, 1)
             if len(toks) == 2:
                 decl_cols.append((toks[0].strip("`"), toks[1]))
-        nullable = getattr(self, "nullable_cols", frozenset())
-        defaults = self.column_defaults or {}
+        nullable = self.decls.nullable
+        defaults = self.decls.defaults
         names = list(fields)
         consts, exprs = {}, []
         for cname, ctype in decl_cols:
@@ -682,7 +749,7 @@ class MergeTreeTable:
 
     def read(self, final: bool = False) -> DataFrame:
         if not final or self.engine == "merge_tree":
-            return self._wrap_object_cols(self.read_raw())
+            return self.decls.finalize_objects(self.read_raw())
         return self._final_of(
             self.read_raw(with_seq=self.engine == "replacing"))
 
@@ -690,12 +757,12 @@ class MergeTreeTable:
         """The plain and the FINAL read from ONE ``read_raw`` — what a
         view refresh after INSERT / mutation / OPTIMIZE registers."""
         if self.engine == "merge_tree":
-            plain = self._wrap_object_cols(self.read_raw())
+            plain = self.decls.finalize_objects(self.read_raw())
             return plain, plain
         raw = self.read_raw(with_seq=self.engine == "replacing")
         plain = raw.drop("__part_seq") if self.engine == "replacing" \
             else raw
-        return self._wrap_object_cols(plain), self._final_of(raw)
+        return self.decls.finalize_objects(plain), self._final_of(raw)
 
     def _final_of(self, raw: DataFrame) -> DataFrame:
         out = self._apply_engine(raw)
@@ -703,26 +770,7 @@ class MergeTreeTable:
             # __part_seq broke equal-version ties by part recency (the
             # reference keeps the last row in the selection)
             out = out.drop("__part_seq")
-        return self._wrap_object_cols(out)
-
-    def _wrap_object_cols(self, df: DataFrame) -> DataFrame:
-        """Deprecated ``Object('json')`` columns finalize to the
-        row-union named TUPLE on reads (reference DataTypeObject —
-        goldens 01825); the stored string carrier parses against the
-        unified struct.  The union scan collects the column once per
-        view registration — a compat shim for the deprecated type,
-        not a scale path (LIMITS.md)."""
-        objs = getattr(self, "obj_cols", None) or ()
-        aobjs = getattr(self, "obj_array_cols", None) or ()
-        if not objs and not aobjs:
-            return df
-        if not hasattr(self, "obj_ch_types"):
-            self.obj_ch_types = {}
-        if not hasattr(self, "obj_trees"):
-            self.obj_trees = {}
-        return finalize_object_columns(
-            df, objs, aobjs, self.obj_ch_types, self.obj_trees,
-            nullable_cols=getattr(self, "obj_nullable_cols", ()))
+        return self.decls.finalize_objects(out)
 
     def _apply_engine(self, df: DataFrame) -> DataFrame:
         if self.engine == "replacing":

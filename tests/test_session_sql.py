@@ -281,3 +281,136 @@ def test_partition_ops_sql(spark, tables):
                   tables=tables).collect()[0].c == 15
     ch_sql(spark, "DROP TABLE po1", tables=tables)
     ch_sql(spark, "DROP TABLE po2", tables=tables)
+
+
+# ---------------------------------------------------------------- Memory
+# A Memory table is one MemoryTable object in ``tables``: DROP, RENAME,
+# mutations and ALTER all act on it, and its column declarations move
+# with it (reference StorageMemory + IStorage column description).
+
+_MEM = "CREATE TABLE {} (k UInt32, s String DEFAULT 'x') ENGINE = Memory"
+
+
+def _rows(spark, tables, sql):
+    return [tuple(r) for r in ch_sql(spark, sql, tables=tables).collect()]
+
+
+def test_memory_drop_forgets_rows(spark, tables):
+    ch_sql(spark, _MEM.format("md1"), tables=tables)
+    ch_sql(spark, "INSERT INTO md1 VALUES (1, 'a')", tables=tables)
+    ch_sql(spark, "DROP TABLE md1", tables=tables)
+    ch_sql(spark, _MEM.format("md1"), tables=tables)
+    ch_sql(spark, "INSERT INTO md1 VALUES (2, 'b')", tables=tables)
+    assert _rows(spark, tables, "SELECT * FROM md1 ORDER BY k") \
+        == [(2, "b")]
+
+
+def test_memory_rename_keeps_defaults(spark, tables):
+    ch_sql(spark, _MEM.format("mr1"), tables=tables)
+    ch_sql(spark, "RENAME TABLE mr1 TO mr2", tables=tables)
+    ch_sql(spark, "INSERT INTO mr2 (k, s) VALUES (3, NULL)",
+           tables=tables)
+    ch_sql(spark, "INSERT INTO mr2 (k) VALUES (4)", tables=tables)
+    assert _rows(spark, tables, "SELECT * FROM mr2 ORDER BY k") \
+        == [(3, "x"), (4, "x")]
+
+
+@pytest.mark.parametrize("stmt", ["DELETE FROM {} WHERE k = 1",
+                                  "ALTER TABLE {} DELETE WHERE k = 1"])
+def test_memory_delete_survives_insert(spark, tables, stmt):
+    ch_sql(spark, _MEM.format("mdel"), tables=tables)
+    ch_sql(spark, "INSERT INTO mdel VALUES (1, 'a'), (2, 'b')",
+           tables=tables)
+    ch_sql(spark, stmt.format("mdel"), tables=tables)
+    ch_sql(spark, "INSERT INTO mdel VALUES (3, 'c')", tables=tables)
+    assert _rows(spark, tables, "SELECT k FROM mdel ORDER BY k") \
+        == [(2,), (3,)]
+
+
+def test_memory_update_survives_insert(spark, tables):
+    ch_sql(spark, _MEM.format("mupd"), tables=tables)
+    ch_sql(spark, "INSERT INTO mupd VALUES (3, 'c')", tables=tables)
+    ch_sql(spark, "ALTER TABLE mupd UPDATE s = 'z' WHERE k = 3",
+           tables=tables)
+    ch_sql(spark, "INSERT INTO mupd VALUES (5, 'e')", tables=tables)
+    assert _rows(spark, tables, "SELECT * FROM mupd ORDER BY k") \
+        == [(3, "z"), (5, "e")]
+
+
+def test_memory_add_column_then_insert(spark, tables):
+    ch_sql(spark, _MEM.format("madd"), tables=tables)
+    ch_sql(spark, "INSERT INTO madd VALUES (1, 'a')", tables=tables)
+    ch_sql(spark, "ALTER TABLE madd ADD COLUMN x UInt8 DEFAULT 9",
+           tables=tables)
+    ch_sql(spark, "INSERT INTO madd (k, s) VALUES (7, 'g')",
+           tables=tables)
+    assert _rows(spark, tables, "SELECT k, s, x FROM madd ORDER BY k") \
+        == [(1, "a", 9), (7, "g", 9)]
+
+
+def test_dropped_json_table_leaves_no_subcolumn_rewrite(spark, tables):
+    ch_sql(spark, "CREATE TABLE mj1 (k UInt32, doc JSON) ENGINE = Memory",
+           tables=tables)
+    ch_sql(spark, "DROP TABLE mj1", tables=tables)
+    ch_sql(spark, "CREATE TABLE mo1 (k UInt32, doc Tuple(a UInt32)) "
+                  "ENGINE = Memory", tables=tables)
+    ch_sql(spark, "INSERT INTO mo1 VALUES (1, tuple(5))", tables=tables)
+    assert _rows(spark, tables, "SELECT k, doc.a FROM mo1") == [(1, 5)]
+
+
+def test_memory_and_mergetree_agree_on_one_column_list(spark, tables):
+    cols = ("(k UInt32, s String DEFAULT 'x', n Nullable(Int32) "
+            "DEFAULT 7, m UInt32 MATERIALIZED k * 2, "
+            "t DateTime('Asia/Tokyo'), t64 DateTime64(0))")
+    engines = {"pmem": "ENGINE = Memory",
+               "pmt": "ENGINE = MergeTree ORDER BY k"}
+    out = {}
+    for name, engine in engines.items():
+        ch_sql(spark, f"CREATE TABLE {name} {cols} {engine}",
+               tables=tables)
+        ch_sql(spark, f"INSERT INTO {name} (k, s, n, t, t64) VALUES "
+                      f"(1, NULL, NULL, '2024-01-02 03:04:05', "
+                      f"'2024-01-02 03:04:05.789')", tables=tables)
+        ch_sql(spark, f"INSERT INTO {name} (k, t, t64) VALUES "
+                      f"(2, '2024-05-06 07:08:09', "
+                      f"'2024-05-06 07:08:09')", tables=tables)
+        show = ch_sql(spark, f"SHOW CREATE TABLE {name}",
+                      tables=tables).collect()[0][0]
+        out[name] = (
+            _rows(spark, tables, f"SELECT * FROM {name} ORDER BY k"),
+            _rows(spark, tables, f"DESCRIBE TABLE {name}"),
+            [ln.rstrip(",") for ln in show.splitlines()
+             if ln.startswith("    ")])
+    mem, mt = out["pmem"], out["pmt"]
+    assert mem == mt
+    rows = mem[0]
+    assert [(r[0], r[1], r[2], r[3]) for r in rows] \
+        == [(1, "x", None, 2), (2, "x", 7, 4)]
+    assert rows[0][5].microsecond == 0
+    desc = {r[0]: r for r in mem[1]}
+    assert desc["n"][1] == "Nullable(Int32)" and desc["n"][2] == "DEFAULT"
+    assert "    `t` DateTime('Asia/Tokyo')" in mem[2]
+
+
+def test_retried_statement_logs_no_error(spark):
+    import logging
+
+    from pyspark.errors import AnalysisException
+    from pyspark.logger import PySparkLogger
+    seen = []
+
+    class _Keep(logging.Handler):
+        def emit(self, record):
+            seen.append(record)
+
+    qlog = PySparkLogger.getLogger("SQLQueryContextLogger")
+    h = _Keep(level=logging.DEBUG)
+    qlog.addHandler(h)
+    try:
+        r = ch_sql(spark, "SELECT sum(number = 1) AS c FROM numbers(3)")
+        assert r.collect()[0].c == 1
+        assert seen == []
+        with pytest.raises(AnalysisException, match="nosuch"):
+            ch_sql(spark, "SELECT nosuch FROM numbers(1)").collect()
+    finally:
+        qlog.removeHandler(h)
