@@ -11094,8 +11094,9 @@ def _run_sql(spark, translated: str):
             try:
                 return _submit(text)
             except Exception as e:
-                text = next((r for r in (p(text, e) for p in passes)
-                             if r is not None), None)
+                text = next((r for r in (globals()[p](text, e)
+                                          for p in passes)
+                              if r is not None), None)
                 if text is None:
                     raise
         return _submit(text)
@@ -11772,18 +11773,19 @@ def _retry_alias_in_where(translated: str, err: Exception):
 # _run_sql's retry rounds: round 1 tries every pass on the first
 # failure; a rewritten statement that still fails gets round 2, then
 # one more USING-qualified pass (each rewrites only the single
-# alias.key the resolver reported)
+# alias.key the resolver reported).  Passes are named, and looked up
+# at each failure, so a module-level replacement of one takes effect
 _RETRY_ROUNDS = (
-    (_retry_alias_in_where, _retry_lateral_agg_alias,
-     _retry_ts_num_compare, _retry_ambiguous_ref, _retry_collate_drop,
-     _retry_using_alias, _retry_using_qualified,
-     _retry_octet_length_array, _retry_missing_aggregation,
-     _retry_bool_arith, _retry_bool_agg_arg, _retry_not_numeric,
-     _retry_int_logical, _retry_order_by_hidden,
-     _retry_distinct_order_expr),
-    (_retry_ambiguous_ref, _retry_using_alias, _retry_using_qualified,
-     _retry_int_logical),
-    (_retry_using_qualified,),
+    ("_retry_alias_in_where", "_retry_lateral_agg_alias",
+     "_retry_ts_num_compare", "_retry_ambiguous_ref", "_retry_collate_drop",
+     "_retry_using_alias", "_retry_using_qualified",
+     "_retry_octet_length_array", "_retry_missing_aggregation",
+     "_retry_bool_arith", "_retry_bool_agg_arg", "_retry_not_numeric",
+     "_retry_int_logical", "_retry_order_by_hidden",
+     "_retry_distinct_order_expr"),
+    ("_retry_ambiguous_ref", "_retry_using_alias", "_retry_using_qualified",
+     "_retry_int_logical"),
+    ("_retry_using_qualified",),
 )
 
 
